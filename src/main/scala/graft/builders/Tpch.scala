@@ -182,12 +182,6 @@ object Tpch {
     * only within a dimension do the fills run in order, so the
     * denormalized view reuses the dimension cache it depends on. */
   def warm(spark: SparkSession, dir: String): Unit = {
-    val dbg = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
-    def t(what: String)(body: => Unit): Unit =
-      if (!dbg) body else {
-        val t0 = System.nanoTime(); body
-        System.err.println(f"[warm] $what ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      }
     val c = cube(spark, dir)
     // The fact and each dimension are INDEPENDENT cache subtrees (dims
     // don't read the fact; the date dim scans the raw file), so their
@@ -199,11 +193,11 @@ object Tpch {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val fills = Future(t("fact")(c.fact.data.count(): Unit)) +:
+    val fills = Future(c.fact.data.count(): Unit) +:
       c.dimensions.values.toSeq.map { d =>
         Future {
-          t(s"dim ${d.name}")(d.data.count(): Unit)
-          t(s"dim ${d.name} denorm")(d.denormalized.count(): Unit)
+          d.data.count()
+          d.denormalized.count(): Unit
         }
       }
     Await.result(Future.sequence(fills), Duration.Inf): Unit

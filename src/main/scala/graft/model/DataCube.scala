@@ -217,6 +217,9 @@ final case class DataCube(fact: Fact, dimensions: ListMap[String, Dimension]) {
 
     // Fact phase: semi-join filter-only dims; inner-join projected dims that
     // contribute attrs (key + needed attrs, broadcast) (R/cube.R:186-205).
+    // Both sides are key-unique dimension tables (a filtered dimension's
+    // are filters over its persisted `denormalized`), so neither needs a
+    // dedup: the lookup join cannot fan the fact out.
     var df = fact.data
     subsetted.foreach { case (n, d) =>
       if (!byDim.contains(n))
@@ -226,8 +229,7 @@ final case class DataCube(fact: Fact, dimensions: ListMap[String, Dimension]) {
       val d = current(n)
       val needed = attrs.filterNot(_ == d.key)
       if (needed.nonEmpty) {
-        val proj = d.denormalized
-          .select((d.key +: needed).map(col): _*).dropDuplicates(Seq(d.key))
+        val proj = d.denormalized.select((d.key +: needed).map(col): _*)
         val joinType = if (subsetted.contains(n)) "inner" else "left"
         df = df.join(Joins.maybeBroadcast(proj), Seq(d.key), joinType)
       } else if (subsetted.contains(n)) {
@@ -421,16 +423,10 @@ final case class DataCube(fact: Fact, dimensions: ListMap[String, Dimension]) {
     val base =
       if (!naFill) fact.data
       else {
-        // ONE job for the cell budget: union the per-dimension counts and
-        // collect once (per-dimension `.count()` serialized N blocking
-        // driver round-trips at composition time).
-        val counts = dimensions.values
-          .map(_.keyValues.agg(count(lit(1)).cast("long").as("c")))
-          .reduce(_ union _)
-          .collect().map(_.getLong(0)).toSeq
-        // BigInt: a many-dimension product overflows Long long before the
-        // budget check — overflow must surface as the budget error
-        val cells = counts.foldLeft(BigInt(1))(_ * _)
+        // ONE job for the cell budget. BigInt: a many-dimension product
+        // overflows Long long before the budget check — overflow must
+        // surface as the budget error
+        val cells = keyCounts.foldLeft(BigInt(1))(_ * _)
         require(cells <= BigInt(maxCells),
           s"na.fill would materialize $cells cells (> $maxCells budget)")
         val dense = dimensions.values.map(_.keyValues)
@@ -443,8 +439,7 @@ final case class DataCube(fact: Fact, dimensions: ListMap[String, Dimension]) {
         .filterNot(df.columns.contains) // collision check (R/data.table.R:92-101)
       if (attrs.isEmpty) df
       else df.join(
-        Joins.maybeBroadcast(d.denormalized.select((d.key +: attrs).map(col): _*)
-          .dropDuplicates(Seq(d.key))),
+        Joins.maybeBroadcast(d.denormalized.select((d.key +: attrs).map(col): _*)),
         Seq(d.key), "left")
     }
   }
@@ -582,9 +577,19 @@ final case class DataCube(fact: Fact, dimensions: ListMap[String, Dimension]) {
   def toDF: DataFrame = denormalize()
 
   /** Number of distinct key values per dimension — `dim(cube)`
-    * (R/data.cube.R:77-119). Runs one small job per dimension. */
+    * (R/data.cube.R:77-119), from one job. */
   def dimCardinalities: Map[String, Long] =
-    dimensions.map { case (n, d) => n -> d.keyValues.count() }
+    ListMap.from(dimensions.keys.zip(keyCounts))
+
+  /** Key count of every dimension, in dimension order, from one unioned
+    * count job (a `.count()` per dimension would serialize one blocking
+    * driver round-trip per dimension). */
+  private def keyCounts: Seq[Long] =
+    if (dimensions.isEmpty) Seq.empty
+    else dimensions.values
+      .map(_.keyValues.agg(count(lit(1)).cast("long").as("c")))
+      .reduce(_ union _)
+      .collect().map(_.getLong(0)).toSeq
 
   /** First n denormalized rows — `head(cube)` (R/data.cube.R:117-119). */
   def head(n: Int = 6): Array[org.apache.spark.sql.Row] = toDF.take(n)

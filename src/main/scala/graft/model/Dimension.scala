@@ -13,20 +13,13 @@ final case class Level(key: String, properties: Seq[String], data: DataFrame) {
 
   /** All queryable columns of this level. */
   def fields: Seq[String] = key +: properties
-
-  /** Filter this level by `{column -> allowed values}` conjunction —
-    * the reference's `level$subset` value-list path (R/level.R:31-45) with
-    * `build.each.i` predicate semantics (R/cube.R:42-45): an empty value
-    * list is constant-false, mirroring `ar[NULL]` (R/level.R:34). */
-  def subset(filters: Map[String, Seq[Any]]): Level = {
-    val pred = Level.conjunction(filters)
-    copy(data = data.filter(pred))
-  }
 }
 
 object Level {
-  /** `{col: values}` -> `col1 IN (...) AND col2 IN (...)`; empty values ->
-    * constant false (reference R/cube.R:42-45, NULL -> 0L). */
+  /** `{col: values}` -> `col1 IN (...) AND col2 IN (...)` — the reference's
+    * `level$subset` value-list path (R/level.R:31-45) with `build.each.i`
+    * predicate semantics (R/cube.R:42-45): an empty value list is
+    * constant-false, mirroring `ar[NULL]` (R/level.R:34; NULL -> 0L). */
   def conjunction(filters: Map[String, Seq[Any]]): Column =
     if (filters.isEmpty) lit(true)
     else filters.map { case (c, vs) =>
@@ -50,15 +43,28 @@ object Hierarchy {
 }
 
 /** A dimension: single-column natural key, hierarchies of levels, a
-  * snowflake-normalized base table (key + all level keys), and one level
-  * table per level key (reference: `dimension` R6 class, R/dimension.R:6-48).
+  * snowflake-normalized base table (key + all level keys), one level
+  * table per level key (reference: `dimension` R6 class,
+  * R/dimension.R:6-48), and the flat `denormalized` table: the base
+  * joined with every level's properties, what the legacy cube stores
+  * directly (R/cube.R:55-61). It is one shared DataFrame, so persisting
+  * it serves every query.
   *
-  * Invariants kept from the reference:
+  * Invariants:
   *  - the key is exactly one column (R/data.cube.R:46);
   *  - levels are the union across hierarchies, merged by level-key name
   *    (R/dimension.R:33-40);
-  *  - the base table is `unique(by = key + all level keys)` projected to
-  *    those columns (R/dimension.R:44-46);
+  *  - the base table holds ONE row per key, projected to key + all level
+  *    keys. Divergence: the reference dedups on key + all level keys
+  *    (R/dimension.R:44-46), so a key carrying two level-key values keeps
+  *    two base rows and fans out a fact join; here one of them is kept, as
+  *    each level table keeps one row per level key. Being key-unique at
+  *    build time lets a query use the base and `denormalized` tables as
+  *    plain lookups — no per-query dedup before a semi-join or a lookup
+  *    join;
+  *  - `denormalized` is unique by key and holds every field, so a subset
+  *    is a filter over it (over the persisted table when the cube is
+  *    cached);
   *  - `fields` is every level key + property, the set of columns a query
   *    may filter on (R/dimension.R:41-42).
   */
@@ -67,22 +73,22 @@ final case class Dimension(
     key: String,
     hierarchies: ListMap[String, Hierarchy],
     levels: ListMap[String, Level],
-    data: DataFrame
+    data: DataFrame,
+    denormalized: DataFrame
 ) {
 
   /** Every queryable column of this dimension (R/dimension.R:41-42). */
   def fields: Seq[String] = levels.values.toSeq.flatMap(_.fields).distinct
 
-  /** Distinct key values of this dimension (the cube's "dimnames" for this
-    * axis — R/dimension.R:116-129). */
-  def keyValues: DataFrame = data.select(key).distinct()
+  /** Key values of this dimension — distinct because the base is unique by
+    * key (the cube's "dimnames" for this axis — R/dimension.R:116-129). */
+  def keyValues: DataFrame = data.select(key)
 
   /** Multi-level dice, the reference's `dimension$subset`
-    * (R/dimension.R:64-93): route each filter column to the level(s) that
-    * own it, filter those levels, semi-join the filtered level keys back
-    * into the base table (intersection across levels = AND, Catalyst ANDs
-    * the chained semi-joins), then re-derive every level from the filtered
-    * base. All lazy — one Spark plan, no action.
+    * (R/dimension.R:64-93): every field is a column of the key-unique
+    * `denormalized` table, so the dice is one conjunctive filter over it
+    * (AND across levels — the reference's index intersection). All lazy —
+    * one Spark plan, no action.
     */
   def subset(filters: Map[String, Seq[Any]]): Dimension = {
     if (filters.isEmpty) return this
@@ -90,40 +96,7 @@ final case class Dimension(
     require(unknown.isEmpty,
       s"unknown field(s) ${unknown.mkString(", ")} in dimension '$name'; " +
         s"known fields: ${fields.mkString(", ")}")
-
-    // Route each filter column to its owning level (R/dimension.R:69-76):
-    // a column belongs to the level whose key it is, or whose properties
-    // contain it; base-table columns (level keys) can also filter directly.
-    val byLevel: Map[String, Map[String, Seq[Any]]] =
-      filters.toSeq.map { case (f, vs) =>
-        val owner = levels.collectFirst {
-          case (lk, lvl) if lvl.fields.contains(f) => lk
-        }.getOrElse(throw new IllegalArgumentException(
-          s"field '$f' not found in any level of dimension '$name'"))
-        (owner, f -> vs)
-      }.groupBy(_._1).map { case (lk, fs) => lk -> fs.map(_._2).toMap }
-
-    // Filter each touched level, semi-join its keys into the base
-    // (R/dimension.R:78-82 — index intersection == chained semi-joins).
-    val filteredBase = byLevel.foldLeft(data) { case (base, (lk, fs)) =>
-      val lvl = levels(lk)
-      // Fast path: filter directly on the base when every filtered column
-      // is present there (always true for the level key itself) — avoids a
-      // join for key-only filters.
-      if (fs.keySet.subsetOf(base.columns.toSet))
-        base.filter(Level.conjunction(fs))
-      else
-        base.join(Joins.maybeBroadcast(lvl.subset(fs).data.select(lk).distinct()),
-          Seq(lk), "left_semi")
-    }
-
-    // Re-derive every level from the filtered base (R/dimension.R:84-87).
-    val newLevels = levels.map { case (lk, lvl) =>
-      lk -> lvl.copy(data = lvl.data.join(
-        Joins.maybeBroadcast(filteredBase.select(lk).distinct()),
-        Seq(lk), "left_semi"))
-    }
-    copy(levels = newLevels, data = filteredBase)
+    restrict(denormalized.filter(Level.conjunction(filters)))
   }
 
   /** Positional slice (array-compat `ar[2,,]` — reference R/level.R:38-41):
@@ -138,36 +111,32 @@ final case class Dimension(
     val picked = ranked
       .filter(col("__pos").isin(positions.map(Integer.valueOf): _*))
       .select(key)
-    val filteredBase = data.join(Joins.maybeBroadcast(picked), Seq(key), "left_semi")
+    restrict(denormalized.join(Joins.maybeBroadcast(picked), Seq(key), "left_semi"))
+  }
+
+  /** This dimension cut down to `rows`, a row subset of [[denormalized]]:
+    * `rows` becomes the new denormalized table, the base is its projection,
+    * and every level keeps only the level keys that survive
+    * (R/dimension.R:84-87). */
+  private def restrict(rows: DataFrame): Dimension = {
+    val base = rows.select(data.columns.map(col): _*)
     val newLevels = levels.map { case (lk, lvl) =>
       lk -> lvl.copy(data = lvl.data.join(
-        Joins.maybeBroadcast(filteredBase.select(lk).distinct()),
-        Seq(lk), "left_semi"))
+        Joins.maybeBroadcast(base.select(lk)), Seq(lk), "left_semi"))
     }
-    copy(levels = newLevels, data = filteredBase)
+    copy(levels = newLevels, data = base, denormalized = rows)
   }
 
   /** Re-grain this dimension to the given attribute columns — used when a
     * query groups by hierarchy attributes: the result cube's dimension is
-    * the projection to those attributes, dedup'd, keyed by the first
-    * (reference: R/cube.R:209-217). */
+    * the projection to those attributes, keyed by the first (reference:
+    * R/cube.R:209-217); `build` dedups it on that key. */
   def regrain(attrs: Seq[String]): Dimension = {
-    val denorm = denormalized.select(attrs.map(col): _*).dropDuplicates(attrs)
     val newKey = attrs.head
     Dimension.build(name, newKey,
-      ListMap("default" -> Hierarchy(ListMap(newKey -> attrs.tail))), denorm)
+      ListMap("default" -> Hierarchy(ListMap(newKey -> attrs.tail))),
+      denormalized.select(attrs.map(col): _*))
   }
-
-  /** The flat, fully-denormalized dimension table: base joined with every
-    * level's properties (what the legacy cube stores directly,
-    * R/cube.R:55-61). Level tables are usually small -> broadcast joins,
-    * but an order-grain level scales with the fact, so the hint goes
-    * through the size-guarded `Joins.maybeBroadcast` policy. Lazy val:
-    * one shared DataFrame, so persisting it benefits every query. */
-  lazy val denormalized: DataFrame =
-    levels.values.filter(_.properties.nonEmpty).foldLeft(data) { (acc, lvl) =>
-      acc.join(Joins.maybeBroadcast(lvl.data), Seq(lvl.key), "left")
-    }
 }
 
 object Dimension {
@@ -178,29 +147,31 @@ object Dimension {
     * either fact carries, so base and level tables union-distinct. For
     * genuinely conformed dimensions (both sides loaded from the same
     * master table, the Kimball discipline) this is a semantic no-op that
-    * exists to keep the merged cube self-contained. */
+    * exists to keep the merged cube self-contained — and conformed sides
+    * agree on every key's attributes, so the union stays unique by key. */
   def conformUnion(a: Dimension, b: Dimension): Dimension = {
     require(a.name == b.name && a.key == b.key,
       s"dimensions are not conformed: '${a.name}'/${a.key} vs '${b.name}'/${b.key}")
     require(a.levels.keySet == b.levels.keySet &&
         a.data.columns.toSeq == b.data.columns.toSeq,
       s"dimension '${a.name}' has mismatched structure across the cubes")
+    def union(x: DataFrame, y: DataFrame): DataFrame = x.unionByName(y).distinct()
     a.copy(
-      data = a.data.unionByName(b.data).distinct(),
+      data = union(a.data, b.data),
       levels = a.levels.map { case (lk, lvl) =>
         val other = b.levels(lk)
         require(lvl.fields.toSet == other.fields.toSet,
           s"level '$lk' of dimension '${a.name}' differs across the cubes")
-        lk -> lvl.copy(data =
-          lvl.data.unionByName(other.data.select(lvl.data.columns.map(col): _*))
-            .distinct())
-      })
+        lk -> lvl.copy(data = union(lvl.data, other.data))
+      },
+      denormalized = union(a.denormalized, b.denormalized))
   }
 
   /** Build a dimension from a flat attribute table + hierarchy specs —
     * the reference's `as.dimension`/`dimension$new` (R/as.dimension.R:33-64,
     * R/dimension.R:14-48): derive merged levels, project the base table to
-    * key + level keys, dedup everything.
+    * key + level keys, dedup every table on its key, and join the
+    * denormalized table (lazy — no Spark job).
     */
   def build(
       name: String,
@@ -232,10 +203,16 @@ object Dimension {
       lk -> Level(lk, props,
         flat.select((lk +: props).map(col): _*).dropDuplicates(Seq(lk)))
     }
-    val levelKeys = withKey.keys.toSeq
     val base = flat
-      .select(((key +: levelKeys).distinct).map(col): _*)
-      .dropDuplicates((key +: levelKeys).distinct)
-    Dimension(name, key, hs, levels, base)
+      .select((key +: withKey.keys.toSeq).distinct.map(col): _*)
+      .dropDuplicates(Seq(key))
+    // Level tables are usually small -> broadcast joins, but an order-grain
+    // level scales with the fact, so the hint goes through the size-guarded
+    // `Joins.maybeBroadcast` policy.
+    val denormalized =
+      levels.values.filter(_.properties.nonEmpty).foldLeft(base) { (acc, lvl) =>
+        acc.join(Joins.maybeBroadcast(lvl.data), Seq(lvl.key), "left")
+      }
+    Dimension(name, key, hs, levels, base, denormalized)
   }
 }

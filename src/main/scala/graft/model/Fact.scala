@@ -23,7 +23,9 @@ final case class Fact(data: DataFrame, idVars: Seq[String], measures: Seq[Measur
     * (broadcast only when the key set's size estimate is safely small —
     * an order-grain dimension scales WITH the fact, and a forced broadcast
     * of billions of keys would OOM every executor; `Joins.maybeBroadcast`
-    * leaves oversized sets to a planned shuffle join), then,
+    * leaves oversized sets to a planned shuffle join; a semi-join ignores
+    * duplicate keys on its build side, so the key sets are used as they
+    * come, with no dedup shuffle), then,
     * only when keys are actually dropped, one grouped re-aggregation over the
     * surviving keys. When no key is dropped the grain is unchanged and the
     * fact is already unique by its full key, so the groupBy would be a
@@ -37,7 +39,7 @@ final case class Fact(data: DataFrame, idVars: Seq[String], measures: Seq[Measur
     */
   def subset(keySets: Map[String, DataFrame], dropKeys: Set[String]): Fact = {
     val joined = keySets.foldLeft(data) { case (df, (fk, keys)) =>
-      df.join(Joins.maybeBroadcast(keys.toDF(fk).distinct()), Seq(fk), "left_semi")
+      df.join(Joins.maybeBroadcast(keys.toDF(fk)), Seq(fk), "left_semi")
     }
     // semi-joins move the join key to the front — restore the canonical
     // idVars ++ measures order so results don't depend on filter order

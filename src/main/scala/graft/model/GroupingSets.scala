@@ -22,7 +22,9 @@ object GroupingSets {
     * grouping attributes exist at fact grain (denormalize-for-aggregation,
     * R/rollup.R:66 denormalizes the whole cube; we project to just the
     * needed columns — Catalyst would prune anyway, this keeps the joins
-    * minimal and broadcastable). Fk columns pass through unchanged. */
+    * minimal and broadcastable). `denormalized` is unique by key, so the
+    * projection is a plain lookup table. Fk columns pass through
+    * unchanged. */
   def denormFor(cube: DataCube, attrs: Seq[String]): DataFrame = {
     val fkCols = cube.fact.idVars.toSet
     val needed = attrs.filterNot(fkCols)
@@ -31,7 +33,6 @@ object GroupingSets {
       val d = cube.dimension(dimName)
       val proj = d.denormalized
         .select((d.key +: as.filterNot(_ == d.key)).distinct.map(col): _*)
-        .dropDuplicates(Seq(d.key))
       df.join(Joins.maybeBroadcast(proj), Seq(d.key), "left")
     }
   }

@@ -415,4 +415,71 @@ class ModelSpec extends SparkSpec {
           Seq(("a", "A")).toDF("g", "grp")))))
     }
   }
+
+  test("a key carrying two level-key values keeps one base row: no fan-out") {
+    import spark.implicits._
+    // key 1 is listed under two groups: the reference's unique(key + level
+    // keys) would keep both rows and double key 1's measures in every join
+    val flat = Seq((1, "x"), (1, "w"), (2, "y"), (3, "y")).toDF("k", "attr")
+    val dim = Dimension.build("one", "k",
+      ListMap("h" -> Hierarchy("attr" -> Seq.empty, "k" -> Seq.empty)), flat)
+    assert(dim.data.count() == 3)
+    assert(dim.data.groupBy("k").count().filter(col("count") > 1).count() == 0)
+    assert(dim.denormalized.count() == 3)
+    val c = DataCube.build(
+      Fact.build(Seq((1, 10.0), (2, 7.0), (3, 2.0)).toDF("k", "v"),
+        Seq("k"), Seq(Measure.sum("v", "sum_v"))),
+      Seq(dim))
+    assert(c.denormalize().count() == c.fact.data.count())
+    val total = c.aggregate(Seq.empty).fact.data.collect().head.getDouble(0)
+    assert(total == 19.0)
+    val byAttr = c.aggregate(Seq("attr")).fact.data.agg(sum("sum_v")).head.getDouble(0)
+    assert(byAttr == total, "grouping by a level key fanned key 1 out")
+  }
+
+  test("dimension subset returns the keys of a plain SQL filter over the flat input") {
+    val dir = sfDir
+    val part = builders.Tpch.partDim(spark, dir)
+    val supplier = builders.Tpch.supplierDim(spark, dir)
+    val partFlat = builders.Tpch.table(spark, dir, "part")
+    val supFlat = builders.Tpch.table(spark, dir, "supplier")
+      .join(builders.Tpch.table(spark, dir, "nation"),
+        col("s_nationkey") === col("n_nationkey"))
+      .join(builders.Tpch.table(spark, dir, "region"),
+        col("n_regionkey") === col("r_regionkey"))
+    def keys(d: Dimension): Set[Any] =
+      d.keyValues.collect().map(_.get(0)).toSet
+    def sqlKeys(flat: org.apache.spark.sql.DataFrame, key: String,
+                where: String): Set[Any] =
+      flat.where(where).select(key).distinct().collect().map(_.get(0)).toSet
+    def firstValues(df: org.apache.spark.sql.DataFrame, c: String, n: Int): Seq[String] =
+      df.select(c).distinct().orderBy(c).limit(n).collect().map(_.getString(0)).toSeq
+    def inList(vs: Seq[String]) = vs.map(v => s"'$v'").mkString(", ")
+
+    // a property of the key level
+    val names = firstValues(partFlat, "p_name", 3)
+    val byName = keys(part.subset(Map("p_name" -> names)))
+    assert(byName.nonEmpty)
+    assert(byName == sqlKeys(partFlat, "p_partkey", s"p_name IN (${inList(names)})"))
+    val sNames = firstValues(supFlat, "s_name", 2)
+    assert(keys(supplier.subset(Map("s_name" -> sNames))) ==
+      sqlKeys(supFlat, "s_suppkey", s"s_name IN (${inList(sNames)})"))
+
+    // two levels at once: AND across the levels
+    val brands = firstValues(partFlat, "p_brand", 5)
+    val types = firstValues(partFlat, "p_type", 40)
+    val both = keys(part.subset(Map("p_brand" -> brands, "p_type" -> types)))
+    assert(both.nonEmpty)
+    assert(both == sqlKeys(partFlat, "p_partkey",
+      s"p_brand IN (${inList(brands)}) AND p_type IN (${inList(types)})"))
+    val regions = firstValues(supFlat, "r_name", 2)
+    val geo = keys(supplier.subset(Map("r_name" -> regions, "s_name" -> sNames)))
+    assert(geo.nonEmpty)
+    assert(geo == sqlKeys(supFlat, "s_suppkey",
+      s"r_name IN (${inList(regions)}) AND s_name IN (${inList(sNames)})"))
+
+    // an empty value list is constant-false
+    assert(keys(part.subset(Map("p_name" -> Seq.empty))).isEmpty)
+    assert(keys(supplier.subset(Map("r_name" -> Seq.empty, "s_name" -> sNames))).isEmpty)
+  }
 }

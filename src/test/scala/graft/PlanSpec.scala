@@ -49,6 +49,57 @@ class PlanSpec extends SparkSpec {
     p +: kids.flatMap(runtimePlanNodes)
   }
 
+  /** Runtime plan nodes OUTSIDE cached relations: like [[runtimePlanNodes]],
+    * but an InMemoryTableScanExec is a leaf — what a query does itself,
+    * not what filled the cache it reads. */
+  private def livePlanNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val kids: Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec  => Seq(a.executedPlan)
+      case q: QueryStageExec         => Seq(q.plan)
+      case _: InMemoryTableScanExec  => Seq.empty
+      case other                     => other.children
+    }
+    p +: kids.flatMap(livePlanNodes)
+  }
+
+  /** Spark jobs started while `body` runs, counted by a listener. A marked
+    * job afterwards flushes the listener bus, so the count is complete. */
+  private def jobsDuring(body: => Unit): Int = {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new AtomicInteger(0)
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val group = Option(js.properties)
+          .map(_.getProperty("spark.jobGroup.id", "")).getOrElse("")
+        if (group == "graft-job-count-marker") markerSeen.countDown()
+        else jobs.incrementAndGet()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobGroup("graft-job-count-marker", "flush")
+      spark.range(1).count()
+      spark.sparkContext.clearJobGroup()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "listener bus never flushed")
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Run `body` with AQE off: AQE splits one action into per-stage jobs, so
+    * a "one action is one job" count is only crisp without it. */
+  private def withoutAqe[T](body: => T): T = {
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try body finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
   private lazy val cube = Tpch.cube(spark, sfDir)
 
   test("dimension joins on the query path are broadcast, never sort-merge") {
@@ -72,8 +123,8 @@ class PlanSpec extends SparkSpec {
     val filtered = cube.q(Seq(
       dim("part").where("p_brand" -> Seq("Brand#1"))), drop = false)
     // grain unchanged -> Fact.subset skips the groupBy. Legit aggregates
-    // remain (the ingest grain agg — cached or inline — and the
-    // dimension-side distinct); a REDUNDANT re-aggregation would add
+    // remain (the ingest grain agg and the dimension build's key dedups —
+    // cached or inline); a REDUNDANT re-aggregation would add
     // measure-producing HashAggregates beyond what the unfiltered fact's
     // own plan contains. Count them in both and require equality — this
     // holds with and without the cube cache.
@@ -225,36 +276,15 @@ class PlanSpec extends SparkSpec {
   }
 
   test("composing a filtered non-key slice runs zero Spark jobs") {
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val c = cube // memoized build's jobs happen before the listener attaches
     c.fact.data.count() // force the cache fill outside the measured window
-    val jobs = new AtomicInteger(0)
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val group = Option(js.properties)
-          .map(_.getProperty("spark.jobGroup.id", "")).getOrElse("")
-        if (group == "graft-compose-marker") markerSeen.countDown()
-        else jobs.incrementAndGet()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsDuring {
       // attribute (non-key) filter with drop=true: the old code ran a
       // limit(2).count() job here to decide the drop
       val q = c.q(dim("part").where("p_brand" -> Seq("Brand#1")))
       assert(q.dimensions.contains("part"))
-      // flush the listener bus with a marked job so the zero-count below
-      // is ordered after anything composition might have submitted
-      spark.sparkContext.setJobGroup("graft-compose-marker", "flush")
-      spark.range(1).count()
-      spark.sparkContext.clearJobGroup()
-      assert(markerSeen.await(60, TimeUnit.SECONDS), "listener bus never flushed")
-      assert(jobs.get() == 0,
-        s"query composition ran ${jobs.get()} Spark job(s); must be zero")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"query composition ran $jobs Spark job(s); must be zero")
   }
 
   test("broadcast size estimates are memoized per distinct dimension plan") {
@@ -276,44 +306,73 @@ class PlanSpec extends SparkSpec {
   }
 
   test("naFill cell-budget guard runs ONE job, not one per dimension") {
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val c = cube
     // cache fills outside the measured window: a cold cached dimension
     // materializes through its own (AQE) jobs inside the guard's collect
     Tpch.warm(spark, sfDir)
-    // AQE splits one action into per-stage jobs — disable it here so "one
-    // action" maps to exactly one job and the count below is crisp
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val jobs = new AtomicInteger(0)
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val group = Option(js.properties)
-          .map(_.getProperty("spark.jobGroup.id", "")).getOrElse("")
-        if (group == "graft-nafill-marker") markerSeen.countDown()
-        else jobs.incrementAndGet()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = withoutAqe(jobsDuring {
       // tiny budget: the guard's count job runs, then the require rejects —
       // so every job counted here belongs to the guard itself
       intercept[IllegalArgumentException] {
         c.denormalize(naFill = true, maxCells = 3)
       }
-      spark.sparkContext.setJobGroup("graft-nafill-marker", "flush")
-      spark.range(1).count()
-      spark.sparkContext.clearJobGroup()
-      assert(markerSeen.await(60, TimeUnit.SECONDS), "listener bus never flushed")
-      assert(jobs.get() == 1,
-        s"cell-budget guard ran ${jobs.get()} jobs; must be one unioned count job")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    })
+    assert(jobs == 1, s"cell-budget guard ran $jobs jobs; must be one unioned count job")
+  }
+
+  test("dimCardinalities runs ONE job, not one per dimension") {
+    val c = cube
+    Tpch.warm(spark, sfDir)
+    var cards = Map.empty[String, Long]
+    val jobs = withoutAqe(jobsDuring { cards = c.dimCardinalities })
+    assert(jobs == 1, s"dimCardinalities ran $jobs jobs; must be one unioned count job")
+    assert(cards.keys.toSeq == c.dimensions.keys.toSeq) // dimension order
+    c.dimensions.foreach { case (n, d) =>
+      assert(cards(n) == d.data.select(d.key).distinct().count(), s"cardinality of $n")
     }
+  }
+
+  test("star requests on the warmed cube: the dimension side is a filter over cached tables") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ShuffleExchangeExec}
+    val c = cube
+    Tpch.warm(spark, sfDir)
+    def live(df: DataFrame) = livePlanNodes(df.queryExecution.executedPlan)
+    def assertNoParquet(df: DataFrame): Unit = {
+      val scans = live(df).collect { case s: FileSourceScanExec => s }
+      assert(scans.isEmpty,
+        s"request re-read parquet outside the cube caches:\n${plan(df)}")
+    }
+    val sliced = c.q(Seq(
+      dim("order").where("c_mktsegment" -> Seq("BUILDING")),
+      dim("part").where("p_brand" -> Seq("Brand#1", "Brand#2"))
+    ), drop = false).aggregate(Seq("p_brand", "d_year")).fact.data
+    // key-unique dimensions: no dedup job before any semi-join or lookup
+    // join, so the run is one job per broadcast (order keys, part keys,
+    // p_brand lookup, d_year lookup), the partial aggregation's shuffle
+    // stage, and the result stage
+    val jobs = jobsDuring(sliced.collect(): Unit)
+    assert(jobs == 6, s"slice + aggregate ran $jobs jobs; expected 6")
+    val nodes = live(sliced)
+    val hashShuffles = nodes.collect {
+      case s: ShuffleExchangeExec if s.outputPartitioning.isInstanceOf[HashPartitioning] => s
+    }
+    assert(hashShuffles.size == 1,
+      s"expected exactly the fact aggregation's shuffle, got ${hashShuffles.size}:\n${plan(sliced)}")
+    nodes.collect { case b: BroadcastExchangeExec => b }.foreach { b =>
+      assert(!livePlanNodes(b.child).exists(_.isInstanceOf[Exchange]),
+        s"dimension side shuffles before its broadcast:\n$b")
+    }
+    assertNoParquet(sliced)
+    // the sliced dimensions' denormalized tables are filters over the
+    // persisted ones, so denormalize reads no level table from parquet
+    val denorm = c.q(Seq(
+      dim("part").where("p_brand" -> Seq("Brand#1")),
+      dim("supplier").where("r_name" -> Seq("ASIA"))
+    ), drop = false).denormalize()
+    denorm.collect()
+    assertNoParquet(denorm)
   }
 
   test("partitioned star fact prunes partitions at the scan on a time slice") {
