@@ -590,18 +590,17 @@ object ScaleProbe {
       "gopher" -> timed(s"$tag gopher quality rules") {
         graft.operators.Quality.gopherReport(d, "doc_id", "text").count()
       },
-      // Gopher repetition: line + gram censuses are (id, value)-keyed
-      // partial-aggregatable shuffles, the top gram a min_by — linear in
-      // tokens; superlinear means a census lost its doc key
+      // Gopher repetition: line + gram censuses run inside each row (one
+      // per-row kernel, no shuffle) — linear in characters; superlinear
+      // means a census left the row
       "repetition" -> timed(s"$tag repetition report") {
         graft.operators.Quality.repetitionReport(d, "doc_id", "text").count()
       },
-      // within-doc repeated-line removal: the census is (id, hash)-keyed
-      // and partial-aggregatable, the rebuild a per-affected-doc bounded
-      // array join — replica-suffixed lines never collide across
-      // replicas, so duplication structure replicates factor× and a
-      // superlinear ratio means the census or rebuild leaked a
-      // data-sized sort (same doctrine as paradedup, scoped per doc)
+      // within-doc repeated-line removal: one projection, each row keeps
+      // its first occurrences in a linear hash-set pass — replica-
+      // suffixed lines never collide across replicas, so duplication
+      // structure replicates factor× and a superlinear ratio means the
+      // removal left the row
       "replines" -> timed(s"$tag repeated-line removal") {
         graft.operators.Dedup.removeRepeatedLines(
           d.withColumn("text", regexp_replace(col("text"),

@@ -469,12 +469,6 @@ object Dedup {
       .distinct()
       .persist()
     try {
-      val dbg = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
-      def t[A](what: String)(body: => A): A =
-        if (!dbg) body else {
-          val t0 = System.nanoTime(); val r = body
-          System.err.println(f"[cc] $what ${(System.nanoTime() - t0) / 1e9}%.2fs"); r
-        }
       // SMALL-GRAPH FAST PATH (maybeBroadcast's doctrine applied to the
       // closure): each distributed round costs a fixed 3-4 Spark jobs,
       // so a few-thousand-edge graph pays seconds of scheduling for
@@ -490,11 +484,8 @@ object Dedup {
         .get("spark.graft.cc.localMaxEdges", "1000000").toLong)
         .getOrElse(1000000L)
       val idOrd = localOrdering(edges.schema("src").dataType)
-      if (localMax > 0 && idOrd.isDefined &&
-        t("edges count")(edges.count()) <= localMax)
-        return t("local union-find")(
-          localClosure(edges, idOrd.get))
-      if (dbg) t("edges materialize")(edges.count(): Unit)
+      if (localMax > 0 && idOrd.isDefined && edges.count() <= localMax)
+        return localClosure(edges, idOrd.get)
       // localCheckpoint (eager) per round, NOT persist: the propagation
       // join embeds the previous round's plan TWICE (self side + neighbor
       // side), so without lineage truncation the logical plan doubles per
@@ -504,10 +495,9 @@ object Dedup {
       // replaces each round's plan with its materialized blocks, keeping
       // planning O(1) per round. Swap for reliable `checkpoint` on a
       // cluster where executor loss mid-algorithm matters.
-      var labels = t("labels init")(
-        edges.select(col("src").as("doc_id")).distinct()
-          .withColumn("component", col("doc_id"))
-          .transform(graft.util.Stage.materialize))
+      var labels = edges.select(col("src").as("doc_id")).distinct()
+        .withColumn("component", col("doc_id"))
+        .transform(graft.util.Stage.materialize)
       var round = 0
       var converged = false
       while (!converged && round < maxIter) {
@@ -520,7 +510,7 @@ object Dedup {
         // the changed flag rides IN the label row: convergence detection
         // is then a filter over the just-materialized blocks — no extra
         // next⋈prev join shuffle per round
-        val next = t("round checkpoint")(labels
+        val next = labels
           .join(nbr, Seq("doc_id"), "left")
           .select(col("doc_id"),
             least(col("component"), coalesce(col("nbr_min"), col("component")))
@@ -528,14 +518,12 @@ object Dedup {
             // id-type-generic (no typed sentinel): null nbr_min = no change
             (col("nbr_min").isNotNull && col("nbr_min") < col("component"))
               .as("changed"))
-          .transform(graft.util.Stage.materialize))
-        val changed = t("changed scan")(next.filter(col("changed")).limit(1).count())
+          .transform(graft.util.Stage.materialize)
+        val changed = next.filter(col("changed")).limit(1).count()
         // previous round's blocks are GC'd by ContextCleaner
         labels = next.select("doc_id", "component")
         converged = changed == 0
         round += 1
-        if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-          System.err.println(s"[cc] round $round changed=$changed")
       }
       if (!converged) {
         // diameter exceeded the round budget: fall back to the
@@ -659,7 +647,6 @@ object Dedup {
       .filter(col("u") =!= col("v"))
       .distinct()
       .transform(graft.util.Stage.materialize)
-    val dbg = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
     // one star half-round: m(u) = min over u's closed neighborhood;
     // rewrite each kept (u, v) edge to (m_u, v). `keepLarger` selects
     // which endpoint set is re-attached.
@@ -712,7 +699,6 @@ object Dedup {
       edges = next
       edgeSig = nextSig
       round += 1
-      if (dbg) System.err.println(s"[cc-logn] round $round stable=$stable")
     }
     require(stable,
       s"large-star/small-star did not stabilize within $maxIter rounds")
@@ -1164,45 +1150,48 @@ object Dedup {
     *
     * Lines normalizing to "" (blank, digits/punct-only) are structure,
     * not content — always kept, even when repeated; docs that lose
-    * nothing pass through `textCol` byte-identical.
+    * nothing pass through `textCol` byte-identical, and a NULL text
+    * stays NULL.
     *
-    * Scale shape: line TEXT never shuffles — only fixed-width
-    * (id, pos, 16-byte hash) rows move, through ONE aggregation keyed
-    * by (id, hash) whose per-group state is bounded by one doc's
-    * repeats of one line; dropped positions fold to one bounded int
-    * array per AFFECTED doc and untouched docs skip the split/rejoin. */
+    * Each ROW is its own document: a line repeated across two rows that
+    * share an id is kept in both (the census never looks across rows).
+    *
+    * Scale shape: one projection over one scan — each row splits into
+    * lines, normalizes them with the [[paragraphNorm]] column, and keeps
+    * first occurrences in one hash-set pass
+    * ([[graft.functions.DocKernels.keepFirstLines]]); nothing shuffles
+    * and no join runs. */
   def removeRepeatedLines(docs: DataFrame, idCol: String, textCol: String,
                           sep: String = "\n"): DataFrame = {
-    val occ = paragraphOccurrences(docs, idCol, textCol, sep)
-    val drops = occ.groupBy(col(idCol), col("__h"))
-      .agg(sort_array(collect_list(col("pos"))).as("__ps"))
-      .where(size(col("__ps")) > 1)
-      .select(col(idCol),
-        explode(slice(col("__ps"), lit(2), size(col("__ps")) - 1))
-          .as("pos"))
-    rebuildWithoutPositions(docs, drops, idCol, textCol, sep)
+    require(sep.nonEmpty, "paragraph separator must be non-empty")
+    val lines = split(col(textCol), java.util.regex.Pattern.quote(sep), -1)
+    docs.withColumn(textCol, graft.functions.DocExpressions.keepFirstLines(
+      col(textCol), lines, transform(lines, paragraphNorm(_)), sep))
   }
 
+  /** The NORMALIZED paragraph (lower, non-letters stripped keeping
+    * whitespace, runs collapsed, trimmed — replayable verbatim in ANSI
+    * SQL) that paragraph dedup censuses and line removal compares.
+    * \p{L} keeps letters of EVERY script — an [a-z]-only class would
+    * normalize all non-Latin text to "" and make paragraph dedup a
+    * silent no-op on the multilingual corpora CCNet targets. */
+  private def paragraphNorm(p: Column): Column =
+    trim(regexp_replace(
+      regexp_replace(lower(p), "[^\\p{L}\\s]", ""), "\\s+", " "))
+
   /** Fixed-width paragraph-occurrence rows (idCol, pos, __h): 1-based
-    * split position and the 16-byte md5 of the NORMALIZED paragraph
-    * (lower, non-letters stripped keeping whitespace, runs collapsed,
-    * trimmed — replayable verbatim in ANSI SQL). Paragraphs normalizing
-    * to "" are structure, not content — never emitted. Texts never
-    * shuffle: the split/normalize/hash is local per doc row. */
+    * split position and the 16-byte md5 of the [[paragraphNorm]]
+    * paragraph. Paragraphs normalizing to "" are structure, not
+    * content — never emitted. Texts never shuffle: the
+    * split/normalize/hash is local per doc row. */
   private def paragraphOccurrences(docs: DataFrame, idCol: String,
                                    textCol: String, sep: String): DataFrame = {
     require(sep.nonEmpty, "paragraph separator must be non-empty")
     val sepRe = java.util.regex.Pattern.quote(sep)
-    // \p{L} keeps letters of EVERY script — an [a-z]-only class would
-    // normalize all non-Latin text to "" and make paragraph dedup a
-    // silent no-op on the multilingual corpora CCNet targets
-    def norm(p: Column): Column =
-      trim(regexp_replace(
-        regexp_replace(lower(p), "[^\\p{L}\\s]", ""), "\\s+", " "))
     docs
       .select(col(idCol), posexplode(split(col(textCol), sepRe, -1)))
       .select(col(idCol), (col("pos") + 1).as("pos"),
-        norm(col("col")).as("__n"))
+        paragraphNorm(col("col")).as("__n"))
       .where(col("__n") =!= "")
       .select(col(idCol), col("pos"), unhex(md5(col("__n"))).as("__h"))
   }

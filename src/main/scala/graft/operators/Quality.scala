@@ -437,11 +437,34 @@ object Quality {
     * both would double-count normalized text). */
   def gopherReport(docs: DataFrame, idCol: String, textCol: String,
                    params: GopherParams = GopherParams()): DataFrame = {
-    val p = params
+    val g = gopherColumns(col(textCol), params)
+    docs.select(col(idCol), g.nWords.as("n_words"),
+      round(g.meanLen, 6).as("mean_word_len"),
+      round(g.symbolR, 6).as("symbol_ratio"),
+      round(g.bulletR, 6).as("bullet_ratio"),
+      round(g.ellR, 6).as("ellipsis_ratio"),
+      round(g.alphaR, 6).as("alpha_ratio"),
+      g.stopHits.as("stop_hits"),
+      coalesce(g.passes.cast("int"), lit(0)).as("passes"))
+  }
+
+  /** The [[gopherReport]] verdict as a row filter: true iff `passes` = 1
+    * for `text`. A gate is `docs.where(gopherPasses(col("text")))` — the
+    * rows themselves, no report frame and no join back by id. */
+  def gopherPasses(text: Column, params: GopherParams = GopherParams()): Column =
+    coalesce(gopherColumns(text, params).passes, lit(false))
+
+  /** The unrounded Gopher metrics of one text column and the combined
+    * rule (NULL when a word ratio is NULL), shared by [[gopherReport]]
+    * and [[gopherPasses]]. */
+  private final case class GopherColumns(
+      nWords: Column, meanLen: Column, symbolR: Column, bulletR: Column,
+      ellR: Column, alphaR: Column, stopHits: Column, passes: Column)
+
+  private def gopherColumns(t: Column, p: GopherParams): GopherColumns = {
     require(p.minWords >= 1 && p.maxWords >= p.minWords,
       s"need 1 <= minWords <= maxWords, got ${p.minWords}..${p.maxWords}")
     require(p.stopwords.nonEmpty, "stopwords must not be empty")
-    val t = col(textCol)
     val ts = array_remove(split(trim(t), "\\s+"), "")
     val lines = split(t, "\n")
     val nWords = size(ts).cast("long")
@@ -465,19 +488,13 @@ object Quality {
     val bulletR = nBullet * d / nLines // nLines >= 1 always
     val ellR = nEllLine * d / nLines
     val alphaR = when(hasWords, nAlpha * d / nWords)
-    val passes = (nWords >= p.minWords && nWords <= p.maxWords &&
+    val passes = nWords >= p.minWords && nWords <= p.maxWords &&
       meanLen >= p.minMeanWordLen && meanLen <= p.maxMeanWordLen &&
       symbolR <= p.maxSymbolRatio && bulletR <= p.maxBulletRatio &&
       ellR <= p.maxEllipsisRatio && alphaR >= p.minAlphaRatio &&
-      stopHits >= p.minStopwordHits).cast("int")
-    docs.select(col(idCol), nWords.as("n_words"),
-      round(meanLen, 6).as("mean_word_len"),
-      round(symbolR, 6).as("symbol_ratio"),
-      round(bulletR, 6).as("bullet_ratio"),
-      round(ellR, 6).as("ellipsis_ratio"),
-      round(alphaR, 6).as("alpha_ratio"),
-      stopHits.as("stop_hits"),
-      coalesce(passes, lit(0)).as("passes"))
+      stopHits >= p.minStopwordHits
+    GopherColumns(nWords, meanLen, symbolR, bulletR, ellR, alphaR, stopHits,
+      passes)
   }
 
   /** The Gopher REPETITION rule family (Rae et al. 2021, Appendix A1.1
@@ -502,55 +519,25 @@ object Quality {
     *    reported uncapped because it ranks, not measures.
     *
     * Docs with no `topN`-gram (under `topN` tokens) report NULL gram
-    * fractions; a doc with no duplicated lines/grams reports 0.
+    * fractions; a doc with no duplicated lines/grams reports 0; a NULL
+    * text reports NULL everywhere but `dup_line_char_frac` (0).
     *
-    * Scale shape: lines and grams explode to (id, value) rows and
-    * census by (id, value) — partial-aggregatable keyed shuffles,
-    * linear in tokens; the per-doc roll-up is a second keyed
-    * aggregation; the top gram is a `min_by` (never a per-doc sort or
-    * window); raw text never joins anything. */
+    * Each ROW is its own document: the censuses never look across rows,
+    * so two rows sharing an id report separately (and a NULL id is
+    * measured like any other).
+    *
+    * Scale shape: one projection over one scan — the line and gram
+    * censuses run inside each row ([[graft.functions.DocKernels]]: one
+    * small hash map per row, evaluated once per row), so nothing
+    * shuffles and no join runs; linear in characters. */
   def repetitionReport(docs: DataFrame, idCol: String, textCol: String,
                        topN: Int = 2, dupN: Int = 3): DataFrame = {
     require(topN >= 1 && dupN >= 1, s"ngram sizes must be >= 1: $topN, $dupN")
     val id = col(idCol)
-    val base = docs.select(id, col(textCol).as("__t"),
-      array_remove(split(trim(col(textCol)), "\\s+"), "").as("__ts"),
-      split(col(textCol), "\n").as("__ls"))
-
-    // line census: (id, line) occurrences, then per-doc duplicate mass
-    val lineStats = base
-      .select(id, explode(col("__ls")).as("l"))
-      .groupBy(id, col("l")).agg(count(lit(1)).as("c"))
-      .groupBy(id).agg(
-        sum(col("c")).as("n_lines"),
-        sum(when(col("c") >= 2, col("c")).otherwise(lit(0L))).as("dup_l"),
-        sum(col("c") * length(col("l"))).as("chars_l"),
-        sum(when(col("c") >= 2, col("c") * length(col("l")))
-          .otherwise(lit(0L))).as("dup_lc"))
-
-    def gramRows(n: Int) = base
-      .where(size(col("__ts")) >= n)
-      .select(id, explode(transform(
-        sequence(lit(1), size(col("__ts")) - (n - 1)),
-        i => concat_ws(" ", slice(col("__ts"), i, lit(n))))).as("g"))
-      .groupBy(id, col("g")).agg(count(lit(1)).as("c"))
-
-    // most frequent topN-gram: ties to the smallest gram — min_by over
-    // the (-count, gram) ordering struct, one aggregation, no window
-    val topStats = gramRows(topN)
-      .groupBy(id).agg(
-        min_by(struct(col("c"), length(col("g")).as("gl")),
-          struct((-col("c")).as("nc"), col("g"))).as("tg"))
-      .select(id, col("tg.c").as("top_c"), col("tg.gl").as("top_len"))
-    val dupStats = gramRows(dupN)
-      .groupBy(id).agg(
-        sum(when(col("c") >= 2, col("c") * length(col("g")))
-          .otherwise(lit(0L))).as("dup_gc"))
-
-    base.select(id, length(col("__t")).cast("long").as("__n"))
-      .join(lineStats, Seq(idCol), "left")
-      .join(topStats, Seq(idCol), "left")
-      .join(dupStats, Seq(idCol), "left")
+    docs.select(id, length(col(textCol)).cast("long").as("__n"),
+      graft.functions.DocExpressions.repetitionStats(col(textCol), topN, dupN)
+        .as("__r"))
+      .select(id, col("__n"), col("__r.*"))
       .select(id,
         col("n_lines"),
         round(col("dup_l") * lit(1.0) / col("n_lines"), 6)

@@ -533,11 +533,11 @@ private[queries] trait CurationQueries { self: ExtensionQueryHelpers =>
         .transform(graft.util.Stage.materialize)
     }
     val en = extracted.where(TextFunctions.langId(col("text")) === "en")
-    val gop = Quality.gopherReport(en, "doc_id", "text",
+    // the language gate, the Gopher gate and the line fix are all
+    // per-row: the stage below is one projection over one scan
+    val kept = en.where(Quality.gopherPasses(col("text"),
       Quality.GopherParams(minWords = 10, maxWords = 1000,
-        stopwords = Seq("the", "a", "data", "value", "table")))
-    val kept = en.join(gop.where(col("passes") === 1).select("doc_id"),
-      Seq("doc_id"), "left_semi")
+        stopwords = Seq("the", "a", "data", "value", "table"))))
     val fixed = lbl(s, "v4: lang+gopher+lines") {
       Dedup.removeRepeatedLines(kept, "doc_id", "text")
         .transform(graft.util.Stage.materialize)
@@ -1987,16 +1987,15 @@ private[queries] trait CurationQueries { self: ExtensionQueryHelpers =>
     val extracted = lbl(s, "v3: html extract")(t.select(col("doc_id"),
       TextFunctions.stripHtml(html).as("text"))
       .transform(graft.util.Stage.materialize))
-    val gop = graft.operators.Quality.gopherReport(extracted, "doc_id",
-      "text", graft.operators.Quality.GopherParams(minWords = 10,
-        maxWords = 1000,
-        stopwords = Seq("the", "a", "data", "value", "table")))
-    // gate survivors materialized too: `kept` feeds the URL-dedup
-    // winners join, the survivor semi-join AND the final shard
-    // aggregation — lazily the Gopher report re-ran per consumer
-    val kept = lbl(s, "v3: gopher gate")(extracted.join(
-      gop.where(col("passes") === 1).select("doc_id"),
-      Seq("doc_id"), "left_semi")
+    // the Gopher gate is a row filter over the extracted rows (no report
+    // frame, no semi-join back by id); survivors are materialized because
+    // `kept` feeds the URL-dedup winners join, the survivor semi-join AND
+    // the final shard aggregation — lazily the gate re-ran per consumer
+    val kept = lbl(s, "v3: gopher gate")(extracted
+      .where(graft.operators.Quality.gopherPasses(col("text"),
+        graft.operators.Quality.GopherParams(minWords = 10,
+          maxWords = 1000,
+          stopwords = Seq("the", "a", "data", "value", "table"))))
       .transform(graft.util.Stage.materialize))
     val id = col("doc_id")
     val url = concat(

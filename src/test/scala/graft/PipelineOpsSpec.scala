@@ -3218,6 +3218,21 @@ class PipelineOpsSpec extends SparkSpec {
       && r3.getDouble(3) == 0.0 && r3.isNullAt(4) && r3.isNullAt(5))
   }
 
+  test("repetitionReport and removeRepeatedLines: a NULL text row") {
+    import spark.implicits._
+    import graft.operators.{Dedup, Quality}
+    val corpus = Seq((1L, "a b\na b"), (2L, null: String)).toDF("doc_id", "text")
+    val r = Quality.repetitionReport(corpus, "doc_id", "text")
+      .where(col("doc_id") === 2L).head()
+    // no lines, no grams: NULL everywhere but the char-weighted line
+    // fraction, whose zero-denominator branch reports 0
+    assert(r.isNullAt(1) && r.isNullAt(2) && r.getDouble(3) == 0.0
+      && r.isNullAt(4) && r.isNullAt(5))
+    val fixed = Dedup.removeRepeatedLines(corpus, "doc_id", "text")
+      .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+    assert(fixed == Map(1L -> Some("a b"), 2L -> None))
+  }
+
   test("gopherReport fixture laws: ratios bounded, verdict consistent") {
     import graft.operators.Quality
     val out = Quality.gopherReport(docs, "doc_id", "text",

@@ -66,8 +66,10 @@ class PlanSpec extends SparkSpec {
   }
 
   /** Spark jobs started while `body` runs, counted by a listener. A marked
-    * job afterwards flushes the listener bus, so the count is complete. */
-  private def jobsDuring(body: => Unit): Int = {
+    * job afterwards flushes the listener bus, so the count is complete.
+    * With a `description`, only jobs carrying that job description
+    * (a `Jobs.labeled` label) count. */
+  private def jobsDuring(body: => Unit, description: String = null): Int = {
     import java.util.concurrent.{CountDownLatch, TimeUnit}
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -77,8 +79,11 @@ class PlanSpec extends SparkSpec {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         val group = Option(js.properties)
           .map(_.getProperty("spark.jobGroup.id", "")).getOrElse("")
+        val desc = Option(js.properties)
+          .map(_.getProperty("spark.job.description")).orNull
         if (group == "graft-job-count-marker") markerSeen.countDown()
-        else jobs.incrementAndGet()
+        else if (description == null || description == desc)
+          jobs.incrementAndGet()
       }
     }
     spark.sparkContext.addSparkListener(listener)
@@ -457,6 +462,34 @@ class PlanSpec extends SparkSpec {
     val nodes = runtimeNodes(chunks.queryExecution.executedPlan)
     assert(!nodes.exists(_.contains("Exchange")),
       s"chunking must be embarrassingly parallel (no shuffle):\n$nodes")
+  }
+
+  test("per-document operators are one projection: one job, no Exchange") {
+    import graft.operators.{Dedup, Quality}
+    val d = spark.read.parquet(s"$sfDir/documents.parquet")
+    Seq("repetitionReport" -> Quality.repetitionReport(d, "doc_id", "text"),
+      "removeRepeatedLines" -> Dedup.removeRepeatedLines(d, "doc_id", "text"))
+      .foreach { case (name, df) =>
+        val counted = withoutAqe(jobsDuring(df.count(): Unit))
+        assert(counted == 1, s"$name.count() ran $counted jobs; expected 1")
+        val collected = jobsDuring(df.collect(): Unit)
+        assert(collected == 1, s"$name.collect() ran $collected jobs; expected 1")
+        val nodes = runtimeNodes(df.queryExecution.executedPlan)
+        assert(!nodes.exists(_.contains("Exchange")),
+          s"$name must not shuffle:\n${plan(df)}")
+      }
+    // the repetition struct is evaluated once per row, not inlined into
+    // each of the fraction columns that read it
+    val rep = Quality.repetitionReport(d, "doc_id", "text")
+    assert(plan(rep).split("repetition_stats\\(").length == 2,
+      s"repetition_stats must appear exactly once:\n${plan(rep)}")
+  }
+
+  test("v4 chain: the language + Gopher gate + line-fix stage materializes in one job") {
+    graft.queries.ExtensionQueries.invalidateV4(spark, sfDir)
+    val jobs = jobsDuring(graft.queries.ExtensionQueries.warmV4(spark, sfDir),
+      description = "v4: lang+gopher+lines")
+    assert(jobs == 1, s"the v4 fixed stage ran $jobs jobs; expected 1")
   }
 
   /** Fixture-generation-robust events reader (same as the query layer). */
