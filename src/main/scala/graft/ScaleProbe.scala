@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.util.GraftSession
 
 /** Empirical scale probe: replicate the sf corpus N× (fresh ids, slightly
   * perturbed text so replicas aren't trivial dups) and time the dedup/ANN
@@ -54,16 +56,8 @@ object ScaleProbe {
     require(factor >= 1, s"replication factor must be >= 1, got $factor")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val outJson = if (args.length > 2) args(2) else "SCALE.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "128m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
 
     val docs1 = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")

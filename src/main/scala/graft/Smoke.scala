@@ -1,19 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.GraftSession
 
 /** Local replica of the driver's t1 smoke: run SparkEntry.entry on sf0.001
   * and require rows > 0. Usage: sbt "runMain graft.Smoke [sfDir]". */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = GraftSession.local(cpus)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"[smoke] entry rows=$n cols=${df.columns.mkString(",")}")

@@ -22,6 +22,13 @@ object SparkEntry {
     ).toDF
   }
 
+  /** The catalogue's build-once memos in dependency order: the near-dup
+    * pairs read the shingle index, so warm runs forward and invalidate
+    * runs in reverse. */
+  val builds: Seq[graft.util.SessionMemo[_]] = Seq(Tpch.memo,
+    ExtensionQueries.shingleMemo, ExtensionQueries.neardupMemo,
+    ExtensionQueries.v4Memo)
+
   private def allQueries = ParityQueries.all ++ ExtensionQueries.all
 
   /** One entry per implemented operator from SURVEY.md §2 + the north-star

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model._
+import graft.util.SessionMemo
 
 /** Adapter from the driver's TPC-H-ish parquet star schema
   * (`/root/testdata/sf*`; see TESTDATA.md / FIXTURES.md §5) to a [[DataCube]]
@@ -140,56 +141,25 @@ object Tpch {
     * and persisted: the reference's usage model is build-once-query-many
     * (an in-memory cube object), so the grain aggregation and dimension
     * dedups are paid once, not per query. MEMORY_AND_DISK: spills instead
-    * of OOM when the fact outgrows executor memory. At 100 TB you would
-    * persist dimensions only and leave the fact on parquet — controlled
-    * here by SPARK_GRAFT_NO_CACHE=1. */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataCube, () => Unit)]()
-
-  def cube(spark: SparkSession, dir: String): DataCube = {
-    val entry = cache.computeIfAbsent((spark, dir), { case (s, d) =>
-      // evict on session stop: long-lived applications cycling sessions
-      // must not pin cubes (and their cached plans) for the JVM lifetime.
-      // SessionCleanup = one listener per context, detachable hook — a
-      // per-entry anonymous listener would stay on the bus after
-      // invalidate() for the JVM lifetime. Hook registered AFTER build
-      // succeeds: a throwing build must not leak a closure on the context's
-      // hook queue per retry.
-      val c = build(s, d)
-      val detach = graft.util.SessionCleanup.onApplicationEnd(s) { () =>
-        cache.remove((s, d)): Unit
-      }
-      (c, detach)
-    })
-    // If the application ended DURING the build, the cleanup hook may have
-    // fired (immediately, via SessionCleanup's late-registration path)
-    // before computeIfAbsent inserted the entry — its remove was a no-op.
-    // Post-insertion check closes that window; FAIL rather than hand back
-    // a cube bound to a stopped context (advisor note r17).
-    if (spark.sparkContext.isStopped) {
-      Option(cache.remove((spark, dir))).foreach(_._2.apply())
-      throw new IllegalStateException(
-        "Tpch.cube: SparkContext stopped during cube build")
-    }
-    entry._1
-  }
+    * of OOM when the fact outgrows executor memory. */
+  def cube(spark: SparkSession, dir: String): DataCube = memo.get(spark, dir)
 
   /** Force-fill the persisted caches (fact grain aggregation + dimension
     * dedups + denormalized views). The cube's usage model is build-once-
     * query-many, so benchmarks should account this cost on its own line
-    * rather than inside whichever query happens to run first. Independent
-    * caches fill CONCURRENTLY (fact and each dimension share nothing);
-    * only within a dimension do the fills run in order, so the
-    * denormalized view reuses the dimension cache it depends on. */
-  def warm(spark: SparkSession, dir: String): Unit = {
-    val c = cube(spark, dir)
-    // The fact and each dimension are INDEPENDENT cache subtrees (dims
-    // don't read the fact; the date dim scans the raw file), so their
-    // fill jobs run concurrently — local[32] is far from saturated by any
-    // one of these small-stage jobs, and on a cluster concurrent jobs
-    // pipeline through the scheduler. WITHIN a dimension the denormalized
-    // view reads the dim cache, so data fills strictly before denorm
-    // (concurrent counts over one unfilled cache duplicate its work).
+    * rather than inside whichever query happens to run first. */
+  def warm(spark: SparkSession, dir: String): Unit = memo.warm(spark, dir)
+
+  private[graft] val memo = new SessionMemo[DataCube]("cube", build, fill, release)
+
+  // The fact and each dimension are INDEPENDENT cache subtrees (dims
+  // don't read the fact; the date dim scans the raw file), so their
+  // fill jobs run concurrently — local[32] is far from saturated by any
+  // one of these small-stage jobs, and on a cluster concurrent jobs
+  // pipeline through the scheduler. WITHIN a dimension the denormalized
+  // view reads the dim cache, so data fills strictly before denorm
+  // (concurrent counts over one unfilled cache duplicate its work).
+  private def fill(c: DataCube): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -203,19 +173,10 @@ object Tpch {
     Await.result(Future.sequence(fills), Duration.Inf): Unit
   }
 
-  /** Drop the memoized cube and unpersist its caches — the eviction hook
-    * for long-lived applications that outlive a (session, dir) working
-    * set. */
-  def invalidate(spark: SparkSession, dir: String): Unit =
-    Option(cache.remove((spark, dir))).foreach { case (c, detach) =>
-      c.fact.data.unpersist()
-      c.dimensions.values.foreach { d => d.data.unpersist(); d.denormalized.unpersist() }
-      detach()
-      // cached-plan size estimates change when the working set's
-      // persistence changes — a stale estimate could force or skip a
-      // broadcast for the next working set
-      graft.model.Joins.invalidateEstimates()
-    }
+  private def release(c: DataCube): Unit = {
+    c.fact.data.unpersist()
+    c.dimensions.values.foreach { d => d.data.unpersist(); d.denormalized.unpersist() }
+  }
 
   private def build(spark: SparkSession, dir: String): DataCube = {
     val fact = Fact.build(factInput(spark, dir), idVars, measures)
@@ -228,16 +189,14 @@ object Tpch {
       supplierDim(spark, dir),
       dateDimFrom(table(spark, dir, "lineitem")
         .select(to_date(col("l_shipdate")).as("d_date")).distinct())))
-    if (!sys.env.contains("SPARK_GRAFT_NO_CACHE")) {
-      import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      // lazy materialization: caches fill as the first query's stages run
-      // (eager parallel counts were measured slower — concurrent counts of
-      // DataFrames sharing unfilled upstream caches duplicate the work)
-      c.fact.data.persist(MEMORY_AND_DISK)
-      c.dimensions.values.foreach { d =>
-        d.data.persist(MEMORY_AND_DISK)
-        d.denormalized.persist(MEMORY_AND_DISK)
-      }
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // lazy materialization: caches fill as the first query's stages run
+    // (eager parallel counts were measured slower — concurrent counts of
+    // DataFrames sharing unfilled upstream caches duplicate the work)
+    c.fact.data.persist(MEMORY_AND_DISK)
+    c.dimensions.values.foreach { d =>
+      d.data.persist(MEMORY_AND_DISK)
+      d.denormalized.persist(MEMORY_AND_DISK)
     }
     c
   }

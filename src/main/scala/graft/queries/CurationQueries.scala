@@ -9,6 +9,7 @@ import graft.builders.Tpch
 import graft.functions.TextFunctions
 import graft.model.{DataCube, Hierarchy, Measure}
 import graft.operators.{Dedup, Events, Sampling, Similarity}
+import graft.util.SessionMemo
 
 /** Corpus-curation and sampling queries: splits, mixing weights, sequence
   * packing, chunking, stratified/diversity sampling, DSIR, quality
@@ -427,56 +428,35 @@ private[queries] trait CurationQueries { self: ExtensionQueryHelpers =>
     * and q152 (stage-yield funnel) so the two oracle rows can never
     * drift apart: both count/aggregate the SAME frames at the SAME
     * localCheckpoint'ed boundaries. */
-  private[queries] final case class V4Stages(
+  private[graft] final case class V4Stages(
       input: DataFrame, extracted: DataFrame, en: DataFrame,
       kept: DataFrame, fixed: DataFrame, para: DataFrame,
       regated: DataFrame, sized: DataFrame, deduped: DataFrame,
       trainSide: DataFrame, cleaned: DataFrame)
 
-  /** Build-once cache for the v4 chain's stage frames, keyed per
+  /** Build-once memo for the v4 chain's stage frames, keyed per
     * (session, dir) — the cube/shingle-index doctrine: q143 and q152
     * both consume the SAME ten localCheckpoint'ed stage boundaries, so
     * the second consumer must ride the first one's materialization
     * instead of re-running the whole chain (the chain is the single
-    * most expensive composed computation in the suite). Frames are
-    * checkpoint-backed; dropping the reference on invalidate lets the
-    * ContextCleaner reclaim the blocks. */
-  private[queries] val v4Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      (V4Stages, () => Unit)]()
+    * most expensive composed computation in the suite). Filling
+    * `cleaned` runs every stage (each boundary is localCheckpoint'ed
+    * eagerly at build); the bench accounts it on its own `build_v4`
+    * line. Frames are checkpoint-backed, so there is nothing to
+    * unpersist: dropping the reference lets the ContextCleaner reclaim
+    * the blocks. */
+  private[graft] val v4Memo = new SessionMemo[V4Stages]("v4",
+    build = buildV4Stages, fill = _.cleaned.count(): Unit, release = _ => ())
 
-  private[queries] def v4Stages(s: SparkSession, dir: String): V4Stages = {
-    val entry = v4Cache.computeIfAbsent((s, dir), { case (ss, d) =>
-      val st = buildV4Stages(ss, d)
-      // hook registered AFTER the (throwing) build — the Tpch.cube
-      // contract: a failed build must not leak hook closures per retry
-      val detach = graft.util.SessionCleanup.onApplicationEnd(ss) { () =>
-        v4Cache.remove((ss, d)): Unit
-      }
-      (st, detach)
-    })
-    // application ended during build: the hook may have fired before the
-    // entry was inserted — evict post-insertion (see Tpch.cube), and FAIL
-    // rather than hand back frames bound to a stopped context
-    if (s.sparkContext.isStopped) {
-      Option(v4Cache.remove((s, dir))).foreach(_._2.apply())
-      throw new IllegalStateException(
-        "v4Stages: SparkContext stopped during chain build")
-    }
-    entry._1
-  }
+  private[queries] def v4Stages(s: SparkSession, dir: String): V4Stages =
+    v4Memo.get(s, dir)
 
-  /** Eviction hook (bench warmup-cache drop, mirrors
-    * [[ExtensionQueryHelpers.invalidateShingles]]). */
-  def invalidateV4(s: SparkSession, dir: String): Unit =
-    Option(v4Cache.remove((s, dir))).foreach(_._2.apply())
+  /** Drop the memoized v4 chain (the curation workload rebuilds it). */
+  def invalidateV4(s: SparkSession, dir: String): Unit = v4Memo.invalidate(s, dir)
 
-  /** Force-fill the v4-chain cache (bench `build_v4` accounting line —
-    * the chain is consumed by q143 AND q152 and must not be absorbed
-    * into whichever runs first). Materializing `cleaned` runs every
-    * stage: each boundary is localCheckpoint'ed eagerly at build. */
-  def warmV4(s: SparkSession, dir: String): Unit =
-    v4Stages(s, dir).cleaned.count(): Unit
+  /** Build and fill the v4 chain (q143 AND q152 consume it, so its cost
+    * must not be absorbed into whichever runs first). */
+  def warmV4(s: SparkSession, dir: String): Unit = v4Memo.warm(s, dir)
 
   /** Label the jobs a stage boundary triggers (guide-§1.5 job labels:
     * the bench UI and the JOBLOG profiler attribute time per stage).

@@ -4,17 +4,20 @@ import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 import graft.builders.Tpch
 import graft.functions.TextFunctions
 import graft.model.{DataCube, Hierarchy, Measure}
 import graft.operators.{Dedup, Events, Sampling, Similarity}
+import graft.util.SessionMemo
 
-/** Shared fixtures, caches, and oracle-SQL building blocks of the
+/** Shared fixtures, build-once memos, and oracle-SQL building blocks of the
   * [[ExtensionQueries]] families. The query surface is unchanged by the
   * per-family file split — everything still resolves through the single
   * `ExtensionQueries` object; this trait only holds what more than one
-  * family needs (`private[queries]`, never wider).
+  * family needs (`private[queries]`; the memos are `private[graft]` so
+  * the bench can list them in `SparkEntry.builds`).
   */
 private[queries] trait ExtensionQueryHelpers {
 
@@ -25,9 +28,11 @@ private[queries] trait ExtensionQueryHelpers {
   private[queries] def docs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")
 
-  /** Shared 3-gram shingle index over documents — persisted per (session,
-    * dir) so the dedup family (q19 Jaccard, q20 MinHash-LSH) builds the
-    * inverted index once, mirroring the cube's build-once-query-many model.
+  /** Shared 3-gram shingle index over documents — memoized and persisted
+    * per (session, dir) so the dedup family (q19 Jaccard, q20 MinHash-LSH)
+    * builds the inverted index once, mirroring the cube's
+    * build-once-query-many model. The bench accounts the fill on its own
+    * `build_shingles` line.
     *
     * The index is CAPPED (maxDf = [[Dedup.DefaultMaxDf]]) *before* the
     * persist: the cap is part of the dedup-family semantics (the oracle
@@ -35,49 +40,14 @@ private[queries] trait ExtensionQueryHelpers {
     * re-run the df aggregation + semi-join in every branch of every
     * consuming plan — the round-2 bench paid 72 s for q19 alone that way.
     * Consumers pass this index with `maxDf = None`. */
-  private[queries] val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, () => Unit)]()
-  private[queries] def shingles3(s: SparkSession, dir: String): DataFrame = {
-    val entry = shingleCache.computeIfAbsent((s, dir), { case (ss, d) =>
-      // hook registered AFTER the index composes (throwing build must not
-      // leak hook closures per retry — same contract as Tpch.cube)
-      val sh = Dedup.buildShingleIndex(docs(ss, d), "doc_id", "text", 3,
-        maxDf = Some(Dedup.DefaultMaxDf))
-      if (!sys.env.contains("SPARK_GRAFT_NO_CACHE"))
-        sh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val detach = graft.util.SessionCleanup.onApplicationEnd(ss) { () =>
-        shingleCache.remove((ss, d)): Unit
-      }
-      (sh, detach)
-    })
-    // application ended during build: the hook may have fired before the
-    // entry was inserted — evict post-insertion (see Tpch.cube), and FAIL
-    // rather than hand back frames bound to a stopped context (they would
-    // throw on first use downstream with a far less explicit error)
-    if (s.sparkContext.isStopped) {
-      Option(shingleCache.remove((s, dir))).foreach(_._2.apply())
-      throw new IllegalStateException(
-        "shingles3: SparkContext stopped during index build")
-    }
-    entry._1
-  }
+  private[graft] val shingleMemo = new SessionMemo[DataFrame]("shingles",
+    build = (s, dir) => Dedup.buildShingleIndex(docs(s, dir), "doc_id", "text", 3,
+      maxDf = Some(Dedup.DefaultMaxDf)).persist(MEMORY_AND_DISK),
+    fill = _.count(): Unit,
+    release = _.unpersist(): Unit)
+  private[queries] def shingles3(s: SparkSession, dir: String): DataFrame =
+    shingleMemo.get(s, dir)
 
-  /** Force-fill the shared shingle index cache (bench `build_shingles`
-    * accounting line — the index is the dominant cost of the dedup family
-    * and is paid once, not per query). */
-  def warmShingles(s: SparkSession, dir: String): Unit =
-    shingles3(s, dir).count(): Unit
-
-  /** Eviction hook: drop + unpersist the shared shingle index and detach
-    * its application-end cleanup hook. */
-  def invalidateShingles(s: SparkSession, dir: String): Unit =
-    Option(shingleCache.remove((s, dir))).foreach { case (sh, detach) =>
-      sh.unpersist()
-      detach()
-      // drop memoized broadcast size estimates with the working set (an
-      // estimate taken against the persisted index is stale once dropped)
-      graft.model.Joins.invalidateEstimates()
-    }
   /** Shared full-corpus MinHash-LSH near-dup pair set + its transitive
     * closure, persisted per (session, dir) — the shingles3 doctrine one
     * level up: SEVEN queries (q20/q34/q45/q90/q103/q122/q125) consume
@@ -87,52 +57,24 @@ private[queries] trait ExtensionQueryHelpers {
     * candidate join + exact verification (+ one closure) per query. The
     * components frame is the closure's output relation (local
     * union-find at fixture scale — a LocalRelation, free to reuse;
-    * checkpointed labels on the distributed path). The bench accounts
-    * the fill on its own `build_neardup_pairs` line (the build-once-
-    * query-many model — same contract as build_cube/build_shingles). */
-  private[queries] val neardupCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      ((DataFrame, DataFrame), () => Unit)]()
-  private[queries] def neardupPairs3(s: SparkSession, dir: String)
-  : (DataFrame, DataFrame) = {
-    val entry = neardupCache.computeIfAbsent((s, dir), { case (ss, d) =>
-      val p = Dedup.minhashLsh(docs(ss, d), "doc_id", "text",
+    * checkpointed labels on the distributed path), so release unpersists
+    * only the pair set: ContextCleaner reclaims the closure's blocks once
+    * the reference drops. The bench accounts the fill on its own
+    * `build_neardup_pairs` line. */
+  private[graft] val neardupMemo = new SessionMemo[(DataFrame, DataFrame)](
+    "neardup_pairs",
+    build = { (s, dir) =>
+      val p = Dedup.minhashLsh(docs(s, dir), "doc_id", "text",
         n = 3, k = 32, bands = 8, threshold = 0.8,
-        maxDf = None, shinglesDf = Some(shingles3(ss, d)))
-      if (!sys.env.contains("SPARK_GRAFT_NO_CACHE"))
-        p.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // the closure evaluates `p`, filling its persist; hook registered
-      // AFTER the (throwing) build — the Tpch.cube contract
-      val comps = Dedup.connectedComponents(p)
-      val detach = graft.util.SessionCleanup.onApplicationEnd(ss) { () =>
-        neardupCache.remove((ss, d)): Unit
-      }
-      ((p, comps), detach)
-    })
-    if (s.sparkContext.isStopped) {
-      Option(neardupCache.remove((s, dir))).foreach(_._2.apply())
-      throw new IllegalStateException(
-        "neardupPairs3: SparkContext stopped during pair-set build")
-    }
-    entry._1
-  }
-
-  /** Force-fill the shared near-dup pair/closure cache (bench
-    * `build_neardup_pairs` accounting line). */
-  def warmNeardupPairs(s: SparkSession, dir: String): Unit = {
-    val (p, _) = neardupPairs3(s, dir)
-    p.count(): Unit
-  }
-
-  /** Eviction hook: drop + unpersist the shared pair set (the closure
-    * frame is a local relation / checkpoint — ContextCleaner reclaims
-    * its blocks once the reference drops). */
-  def invalidateNeardupPairs(s: SparkSession, dir: String): Unit =
-    Option(neardupCache.remove((s, dir))).foreach { case ((p, _), detach) =>
-      p.unpersist()
-      detach()
-      graft.model.Joins.invalidateEstimates()
-    }
+        maxDf = None, shinglesDf = Some(shingles3(s, dir)))
+        .persist(MEMORY_AND_DISK)
+      // the closure evaluates `p`, filling its persist
+      (p, Dedup.connectedComponents(p))
+    },
+    fill = _._1.count(): Unit,
+    release = _._1.unpersist(): Unit)
+  private[queries] def neardupPairs3(s: SparkSession, dir: String)
+  : (DataFrame, DataFrame) = neardupMemo.get(s, dir)
 
   private[queries] def emb(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")

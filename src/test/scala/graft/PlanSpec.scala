@@ -264,6 +264,27 @@ class PlanSpec extends SparkSpec {
       s"unguarded broadcast() call sites outside the allowlist: $offenders")
   }
 
+  test("sessions, environment reads and session-keyed caches each live in one place") {
+    // Every main runs GraftSession's config; library code takes its
+    // settings from the session, not the process environment; a build-once
+    // cache keyed by session goes through SessionMemo's eviction protocol.
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    val sources = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    def containing(needle: String, in: Seq[Path] = sources): List[String] =
+      in.filter(p => new String(Files.readAllBytes(p)).contains(needle))
+        .map(p => root.relativize(p).toString).toList.sorted
+    assert(containing("SparkSession.builder") == List("graft/util/GraftSession.scala"))
+    val library = Seq("model", "operators", "queries", "builders", "functions",
+      "io", "streaming", "sources", "query", "util")
+      .map(d => root.resolve("graft").resolve(d))
+    assert(containing("sys.env", sources.filter(p => library.exists(p.startsWith))) == Nil)
+    assert(containing("ConcurrentHashMap[(SparkSession") ==
+      List("graft/util/SessionMemo.scala"))
+  }
+
   test("queries stay correct when the broadcast policy degrades to shuffle joins") {
     import graft.query.dsl._
     val reference = cube.q(Seq(
