@@ -1,7 +1,7 @@
 package graft
 
 /** Cross-round bench comparison helpers — separated from the main so the
-  * artifact-parsing contract is law-testable (Round17Spec). */
+  * artifact-parsing contract is law-testable (UtilSpec). */
 object BenchCompare {
 
   /** Per-query min from a prior bench artifact: prefer

@@ -108,14 +108,10 @@ object Tpch {
       flat)
   }
 
-  /** Date dimension derived from the fact's ship dates — the reference's
-    * two-hierarchy time dimension (R/populate.R:28-37, 96-109). */
-  def dateDim(spark: SparkSession, dir: String): Dimension =
-    dateDimFrom(factInput(spark, dir).select("d_date").distinct())
-
-  /** Build the date dimension from an existing distinct-dates DataFrame —
-    * lets the cube derive it from the (persisted) fact instead of a second
-    * lineitem scan. */
+  /** Date dimension from a distinct-dates DataFrame — the reference's
+    * two-hierarchy time dimension (R/populate.R:28-37, 96-109), derived
+    * from the (persisted) fact's ship dates instead of a second lineitem
+    * scan. */
   def dateDimFrom(dates: DataFrame): Dimension = {
     val flat = dates
       .withColumn("d_year", year(col("d_date")))

@@ -50,11 +50,6 @@ final case class Fact(data: DataFrame, idVars: Seq[String], measures: Seq[Measur
       copy(data = Fact.aggregate(filtered, keep, measures), idVars = keep)
     }
   }
-
-  /** Re-aggregate to an arbitrary set of grouping columns (which must exist
-    * in `data` — used by attribute group-by after joins widen the fact). */
-  def aggregateBy(df: DataFrame, by: Seq[String]): DataFrame =
-    Fact.aggregate(df, by, measures)
 }
 
 object Fact {

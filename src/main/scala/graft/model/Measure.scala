@@ -77,16 +77,10 @@ object Measure {
   def firstBy(vr: String, name: String, order: Column): Measure =
     Measure(vr, name, c => min_by(c, order))
 
-  /** R semantics `sum(x)` with na.rm=FALSE: one NA poisons the aggregate.
-    * Spark aggregates skip nulls, so wrap: if any input row had a null,
-    * return null (SURVEY §7.3's expression wrapper — no custom Expression). */
-  def sumNaPoison(vr: String, name: String = null): Measure =
-    Measure(vr, Option(name).getOrElse(vr), naPoison(functions.sum))
-
-  def avgNaPoison(vr: String, name: String = null): Measure =
-    Measure(vr, Option(name).getOrElse(vr), naPoison(functions.avg))
-
-  /** Wrap any null-skipping aggregate into a null-propagating one. */
+  /** R semantics with na.rm=FALSE: one NA poisons the aggregate. Spark
+    * aggregates skip nulls, so wrap any of them: if an input row had a
+    * null, return null (SURVEY §7.3's expression wrapper — no custom
+    * Expression). `Measure(vr, name, naPoison(sum))` is R's `sum(x)`. */
   def naPoison(f: Column => Column): Column => Column =
     c => when(functions.count(when(c.isNull, lit(1))) > 0, lit(null)).otherwise(f(c))
 

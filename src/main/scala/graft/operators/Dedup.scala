@@ -456,7 +456,18 @@ object Dedup {
     * @param pairs near-dup pairs, e.g. [[minhashLsh]]/[[jaccardPairs]] output
     */
   def connectedComponents(pairs: DataFrame, iCol: String = "i",
-                          jCol: String = "j", maxIter: Int = 20): DataFrame = {
+                          jCol: String = "j", maxIter: Int = 20): DataFrame =
+    connectedComponents(pairs, iCol, jCol, maxIter, LocalMaxEdges)
+
+  /** Edge count up to which [[connectedComponents]] closes on the driver. */
+  private val LocalMaxEdges = 1000000L
+
+  /** [[connectedComponents]] with its small-graph size guard as a
+    * parameter: 0 forces the distributed path (the specs pin both paths
+    * and the maxIter fallback). */
+  private[graft] def connectedComponents(pairs: DataFrame, iCol: String,
+                                         jCol: String, maxIter: Int,
+                                         localMaxEdges: Long): DataFrame = {
     // both edge directions from ONE evaluation of `pairs` — a
     // union(pairs, pairs.reversed) embeds the (potentially expensive)
     // pair-generation plan twice and evaluates it twice in the persist
@@ -477,14 +488,11 @@ object Dedup {
       // (already linear, never member x member) edge list and run an
       // exact min-root union-find driver-side; at scale the count is
       // one pass over the just-persisted blocks and the distributed
-      // path proceeds untouched. The threshold is session-tunable
-      // (spark.graft.cc.localMaxEdges; 0 forces the distributed path —
+      // path proceeds untouched. The guard is `localMaxEdges`
+      // (LocalMaxEdges by default; 0 forces the distributed path —
       // the specs pin both paths' equivalence).
-      val localMax = scala.util.Try(edges.sparkSession.conf
-        .get("spark.graft.cc.localMaxEdges", "1000000").toLong)
-        .getOrElse(1000000L)
       val idOrd = localOrdering(edges.schema("src").dataType)
-      if (localMax > 0 && idOrd.isDefined && edges.count() <= localMax)
+      if (localMaxEdges > 0 && idOrd.isDefined && edges.count() <= localMaxEdges)
         return localClosure(edges, idOrd.get)
       // localCheckpoint (eager) per round, NOT persist: the propagation
       // join embeds the previous round's plan TWICE (self side + neighbor

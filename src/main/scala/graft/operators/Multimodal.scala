@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -626,13 +626,6 @@ object Multimodal {
     }.toDF("media_id", "audio_hash")
   }
 
-  /** Audio near-duplicate pairs: envelope hash within `maxHamming` bits
-    * via the shared pigeonhole banding ([[Dedup.hammingPairs]]) —
-    * equi-joins on band values; the audio bytes never shuffle. */
-  def audioNearDupPairs(media: DataFrame, maxHamming: Int = 5): DataFrame =
-    Dedup.hammingPairs(audioHashes(media), "media_id", "audio_hash",
-      bits = 64, maxHamming = maxHamming)
-
   /** Feature extraction over a media DataFrame: one decoder per partition,
     * rows streamed through it (mapPartitions — the iterator is lazy, so a
     * 10 GB partition never materializes). Output: (media_id, n_bytes,
@@ -790,40 +783,5 @@ object Multimodal {
     val hdrl = riffList("hdrl", avih ++ riffList("strl", strh ++ strf))
     val movi = riffList("movi", dibs.flatMap(d => riffChunk("00db", d)).toArray)
     riffAvi(hdrl, movi)
-  }
-
-  /** Frame sampling plumbing for video blobs: emits `n` (frame_no, offset
-    * fraction) stubs per video row — the explode shape of a real frame
-    * sampler (each frame row would carry decoded bytes). Deterministic. */
-  def sampleFrames(media: DataFrame, n: Int): DataFrame = {
-    media
-      .filter(col("meta.media_type") === "video")
-      .select(col("media_id"), col("meta.duration_ms").as("duration_ms"),
-        posexplode(sequence(lit(0), lit(n - 1))).as(Seq("frame_idx", "_")))
-      .drop("_")
-      .withColumn("offset_ms",
-        (col("frame_idx").cast("double") / n * col("duration_ms")).cast("long"))
-      .select("media_id", "frame_idx", "offset_ms")
-  }
-
-  /** Deterministic synthetic media table for tests/demos: `rows` blobs of
-    * pseudo-random bytes with metadata, built distributed from
-    * spark.range (no driver-side data). */
-  def syntheticMedia(spark: SparkSession, rows: Int): DataFrame = {
-    val types = array(lit("image"), lit("audio"), lit("video"))
-    spark.range(rows.toLong).toDF("media_id")
-      .withColumn("content",
-        unhex(repeat(substring(md5(col("media_id").cast("string")), 1, 16), 4)))
-      .withColumn("media_type", element_at(types, (col("media_id") % 3 + 1).cast("int")))
-      .withColumn("meta", struct(
-        col("media_type"),
-        when(col("media_type") === "image", lit("png"))
-          .when(col("media_type") === "audio", lit("wav"))
-          .otherwise(lit("mp4")).as("format"),
-        when(col("media_type") === "image", lit(64)).otherwise(lit(null).cast("int")).as("width"),
-        when(col("media_type") === "image", lit(64)).otherwise(lit(null).cast("int")).as("height"),
-        when(col("media_type") =!= "image", col("media_id") * 1000 + 1000)
-          .otherwise(lit(null).cast("long")).as("duration_ms")))
-      .select("media_id", "content", "meta")
   }
 }

@@ -72,16 +72,6 @@ object Sampling {
     df.withColumn("split", assign)
   }
 
-  /** Deterministic Bernoulli(rate) sample by id hash: keeps exactly the
-    * rows with hashUniform < rate. Two samples at rates r1 < r2 with the
-    * same salt are NESTED (the r1 sample is a subset of the r2 sample) —
-    * the property that lets you grow a sample without resampling. */
-  def hashSample(df: DataFrame, idCol: String, rate: Double,
-                 salt: String = ""): DataFrame = {
-    require(rate >= 0 && rate <= 1, s"rate must be in [0,1], got $rate")
-    df.filter(hashUniform(col(idCol), salt) < rate)
-  }
-
   /** Stratified deterministic sample: a per-stratum rate (e.g. language →
     * keep fraction for corpus rebalancing), `defaultRate` for strata not
     * listed. Same per-row projection shape — the rate lookup is a chained
@@ -598,18 +588,6 @@ object Sampling {
     writeBinnedAssignment(packed, numShards, path)
     packed
   }
-
-  /** Materialize [[shuffleShards]] as the on-disk training export:
-    * parquet hive-partitioned by `shard`, with each shard's rows laid
-    * down in `pos` order (repartition on the shard key →
-    * sortWithinPartitions → one writer and ONE ordered file per shard),
-    * so a training loader streams `shard=k/` sequentially and reads the
-    * deterministic global shuffle order with no reader-side sort. The
-    * write adds nothing beyond [[shuffleShards]]'s one shuffle — the
-    * within-partition sort feeds the writer directly. */
-  def writeShards(df: DataFrame, idCol: String, numShards: Int,
-                  path: String, salt: String = ""): Unit =
-    writeAssigned(shuffleShards(df, idCol, numShards, salt), numShards, path)
 
   /** Materialize ANY (shard, pos)-assigned frame ([[shuffleShards]],
     * [[curriculumShards]]) as the loader-ready layout: parquet

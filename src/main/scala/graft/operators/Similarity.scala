@@ -190,16 +190,6 @@ object Similarity {
       md5Long(s"$table|$plane|$i").toDouble / (1L << 60).toDouble - 0.5
     }
 
-  /** Sign-LSH bucket id for one table: `planes` sign bits of projections
-    * onto deterministic hyperplanes. */
-  def lshBucket(vec: Column, table: Int, planes: Int, dim: Int): Column = {
-    val bits = (0 until planes).map { p =>
-      val plane = lit(planeVector(table, p, dim))
-      when(dotp(vec, plane) > 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
   /** All `tables` hyperplanes as one constant tensor [table][plane][dim]
     * for [[graft.functions.AnnKernels.signLshBuckets]]. */
   private def planeTensor(tables: Int, planes: Int,

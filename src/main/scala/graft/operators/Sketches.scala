@@ -173,19 +173,6 @@ object Sketches {
         :+ col("n_items")): _*)
   }
 
-  /** Persist a heavy-hitters cube: one MG cell per `grain` row,
-    * hive-partitioned by `partitionBy` (one of the grain columns — the
-    * ingest unit) so [[ingestTermSummary]] touches only the delta's
-    * partitions. */
-  def saveTermSummaryCube(df: DataFrame, path: String, grain: Seq[String],
-                          termCol: String, partitionBy: String,
-                          k: Int = 1024): Unit = {
-    require(grain.contains(partitionBy),
-      s"partition column $partitionBy must be part of the grain $grain")
-    termSummaryAtGrain(df, grain, termCol, k)
-      .write.mode("overwrite").partitionBy(partitionBy).parquet(path)
-  }
-
   /** Incremental maintenance of a stored heavy-hitters cube — the
     * [[ingestSketchCube]] protocol for MG cells: summarize the raw delta
     * at grain (ONE delta scan, never of history), read ONLY the touched

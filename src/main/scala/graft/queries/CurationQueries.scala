@@ -2268,7 +2268,7 @@ private[queries] trait CurationQueries { self: ExtensionQueryHelpers =>
   //        those REAL tokens (q151's harmonic bucketing), land the
   //        loader-ready shard layout, and read the export back. The
   //        counts frame materializes ONCE (localCheckpoint inside
-  //        packTokenizedBpe — plan-pinned in Round16Spec). BPE counts
+  //        packTokenizedBpe — plan-pinned in BpeSpec). BPE counts
   //        aren't SQL-replayable, so the verdicts are construction-true
   //        laws computed against the SAME encode frame: packed totals
   //        equal the (truncation-adjusted) encode totals, no doc crosses
@@ -2379,7 +2379,7 @@ private[queries] trait CurationQueries { self: ExtensionQueryHelpers =>
   //        is arithmetic over count(documents) → REAL hash row (the
   //        q156 doctrine applied to the streaming batch stores). The
   //        zero-jobs/no-write healthy no-op is law-pinned in
-  //        Round17Spec.
+  //        StreamingSpec.
   // -------------------------------------------------------------------
   def q157(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -164,9 +164,9 @@ object ExtensionQueries extends ExtensionQueryHelpers
     ("q152_curation_funnel", q152 _, q152Sql),
     ("q153_unigram_train", q153 _, q153Sql), // verdict + Round15Spec EM laws
     ("q154_index_health", q154 _, q154Sql),
-    ("q155_packed_tokenized", q155 _, q155Sql), // verdict + Round16Spec laws
+    ("q155_packed_tokenized", q155 _, q155Sql), // verdict + BpeSpec laws
     ("q156_maintain_index", q156 _, q156Sql),
     ("q157_maintain_store", q157 _, q157Sql),
-    ("q158_packed_unigram", q158 _, q158Sql) // verdict + Round16/17Spec laws
+    ("q158_packed_unigram", q158 _, q158Sql) // verdict + BpeSpec laws
   )
 }

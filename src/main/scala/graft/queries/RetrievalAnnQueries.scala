@@ -1412,7 +1412,7 @@ private[queries] trait RetrievalAnnQueries { self: ExtensionQueryHelpers =>
   //        over the corpus count + build parameters → REAL hash row
   //        (the q154 doctrine). The healthy-store no-op (zero jobs
   //        beyond the footer census, no write) is law-pinned in
-  //        Round16Spec — a no-op leaves nothing SQL-visible to hash.
+  //        AnnIndexSpec — a no-op leaves nothing SQL-visible to hash.
   // -------------------------------------------------------------------
   def q156(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Similarity

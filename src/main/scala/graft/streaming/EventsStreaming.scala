@@ -319,15 +319,4 @@ object EventsStreaming {
           col("from_ts") >= col("to_ts") - expr(s"INTERVAL $within"))
       .select("event_id", "user_id", "to_ts", "from_ts")
   }
-
-  /** Run a streaming aggregation into an in-memory sink (testing) —
-    * returns the query handle; the parquet production shape is
-    * [[startToCubeSink]]. */
-  def startToMemory(agg: DataFrame, name: String): StreamingQuery =
-    agg.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow())
-      .start()
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -369,7 +370,7 @@ class FuzzyJoinSpec extends SparkSpec {
   test("small-graph local closure ≡ distributed closure on random graphs") {
     // the size-guarded driver union-find must produce bit-identical
     // labels to the distributed min-label propagation — compare them on
-    // generated graphs by flipping the session threshold
+    // generated graphs by setting the size guard to 0
     val graphGen: Gen[List[(Long, Long)]] = for {
       n <- Gen.chooseNum(4, 30)
       m <- Gen.chooseNum(2, 50)
@@ -378,12 +379,11 @@ class FuzzyJoinSpec extends SparkSpec {
     } yield edges
     forAll(graphGen, n = 6) { es =>
       val pairs = es.toDF("i", "j")
-      def labels(): Map[Long, Long] = Dedup.connectedComponents(pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val fast = labels() // default threshold: local path
-      spark.conf.set("spark.graft.cc.localMaxEdges", "0")
-      val dist = try labels() // forced distributed path
-      finally spark.conf.unset("spark.graft.cc.localMaxEdges")
+      def labels(cc: DataFrame): Map[Long, Long] =
+        cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val fast = labels(Dedup.connectedComponents(pairs)) // local path
+      // forced distributed path
+      val dist = labels(Dedup.connectedComponents(pairs, "i", "j", 20, 0L))
       assert(fast == dist, s"edges=$es")
     }
   }
@@ -398,12 +398,12 @@ class FuzzyJoinSpec extends SparkSpec {
     val supp = new String(Character.toChars(0x10000)) // U+10000
     val pua = "\uE000" // private-use-area char, one UTF-16 code unit
     val pairs = Seq((supp, pua)).toDF("i", "j")
-    def labels(): Map[String, String] = Dedup.connectedComponents(pairs)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val fast = labels() // default threshold: local union-find
-    spark.conf.set("spark.graft.cc.localMaxEdges", "0")
-    val dist = try labels() // forced distributed min-label propagation
-    finally spark.conf.unset("spark.graft.cc.localMaxEdges")
+    def labels(cc: DataFrame): Map[String, String] =
+      cc.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    // default guard: local union-find
+    val fast = labels(Dedup.connectedComponents(pairs))
+    // guard 0: forced distributed min-label propagation
+    val dist = labels(Dedup.connectedComponents(pairs, "i", "j", 20, 0L))
     assert(fast == dist,
       s"supplementary-plane min root diverged: local=$fast distributed=$dist")
     // and the shared root is the UTF-8-least member (U+E000), not the
@@ -440,8 +440,8 @@ class FuzzyJoinSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.size == 121 && labels.values.toSet == Set(0L),
       s"chain closure wrong: ${labels.toSeq.sortBy(_._1).take(8)}")
-    // and the DEFAULT operator survives the same chain by falling back
-    // (previously it raised at maxIter)
+    // and the default operator closes the same chain (120 edges sit far
+    // below its size guard, so this is the driver union-find)
     val viaDefault = Dedup.connectedComponents(chain)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaDefault == labels)
@@ -450,6 +450,20 @@ class FuzzyJoinSpec extends SparkSpec {
     val ls = Dedup.connectedComponentsLogN(withSelf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(ls(999L) == 999L && ls.size == 122)
+  }
+
+  test("distributed closure that misses maxIter falls back to the logN closure") {
+    // a permuted 6-node chain needs at least 3 propagation rounds: with
+    // the size guard at 0 and maxIter = 1 the min-label propagation
+    // cannot converge, so only the connectedComponentsLogN fallback
+    // gives every node the chain's min id
+    val perm = new scala.util.Random(5).shuffle((0L to 5L).toList)
+    val chain = (0 until 5).map(i => (perm(i), perm(i + 1))).toDF("i", "j")
+    def labels(cc: DataFrame): Map[Long, Long] =
+      cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = labels(Dedup.connectedComponents(chain, "i", "j", 1, 0L))
+    assert(got == labels(Dedup.connectedComponentsLogN(chain)))
+    assert(got.size == 6 && got.values.toSet == Set(0L), s"labels: $got")
   }
 
   test("keep-best dedup equals brute-force winner selection on random graphs") {
@@ -600,5 +614,33 @@ class FuzzyJoinSpec extends SparkSpec {
     val (r3, sfx) = EntityResolution.suffixPass(rows, "name", 3)
     assert(labels(r3, Seq(Seq("nation"), sfx)) ==
       Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 3L))
+  }
+
+  // ------------------------------------------------------------------
+  // resolveDeltaMulti restructure equivalence
+  // ------------------------------------------------------------------
+
+  test("resolveDeltaMulti after the r18 restructure: adoption minimum " +
+    "still propagates to every component member, components with no " +
+    "adopted member keep their component-min id, non-edge records keep " +
+    "their own id") {
+    // corpus: two stored entities under nation blocking
+    val corpus = Seq(
+      (100L, "smith", 1), (101L, "smith", 1), // entity 100
+      (200L, "jones", 2)                      // entity 200
+    ).toDF("rid", "name", "blk")
+    val stored = EntityResolution.resolve(corpus, "rid", "name", "blk", 1)
+    val delta = Seq(
+      (300L, "smith", 1),  // adopts 100 directly
+      (301L, "smyth", 1),  // within-delta edge to 300 (dist 1) → adopts 100
+      (400L, "zzzzz", 2),  // fresh pair: new entity labeled by min id
+      (401L, "zzzzz", 2),
+      (500L, "alone", 3)   // isolated, matches nothing: keeps own id
+    ).toDF("rid", "name", "blk")
+    val got = EntityResolution.resolveDelta(stored, delta, "rid", "name",
+      "blk", 1).select("rid", "entity_id").as[(Long, Long)]
+      .collect().toMap
+    assert(got == Map(300L -> 100L, 301L -> 100L,
+      400L -> 400L, 401L -> 400L, 500L -> 500L))
   }
 }

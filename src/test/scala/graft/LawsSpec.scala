@@ -167,8 +167,9 @@ class LawsSpec extends SparkSpec {
       a <- Gen.chooseNum(1, 99); b <- Gen.chooseNum(1, 99)
     } yield (math.min(a, b) / 100.0, math.max(a, b) / 100.0)
     forAll(rateGen) { case (lo, hi) =>
-      val small = Sampling.hashSample(ids, "id", lo).as[Long].collect().toSet
-      val big = Sampling.hashSample(ids, "id", hi).as[Long].collect().toSet
+      def sample(rate: Double) =
+        ids.filter(Sampling.hashUniform(col("id")) < rate).as[Long].collect().toSet
+      val (small, big) = (sample(lo), sample(hi))
       assert(small.subsetOf(big), s"sample($lo) ⊄ sample($hi)")
     }
     // any weight vector: splits partition the table (disjoint + exhaustive)

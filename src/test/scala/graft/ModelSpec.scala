@@ -229,10 +229,34 @@ class ModelSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq(("a", Some(1.0)), ("a", None), ("b", Some(2.0)))
       .toDF("g", "v")
-    val m = Measure.sumNaPoison("v", "s")
+    val m = Measure("v", "s", Measure.naPoison(c => sum(c)))
     val r = df.groupBy("g").agg(m.expr).orderBy("g").collect()
     assert(r(0).isNullAt(1)) // a poisoned by the null
     assert(r(1).getDouble(1) == 2.0)
+  }
+
+  test("fromStar (as.data.cube.list) equals the cube built from its parts") {
+    import graft.builders.Tpch
+    val raw = Tpch.factInput(spark, sfDir)
+    val ids = Seq("p_partkey", "s_suppkey")
+    val dims = Seq(
+      ("part", "p_partkey", ListMap("product" -> Hierarchy(
+        "p_type" -> Seq.empty, "p_partkey" -> Seq("p_name"))),
+        Tpch.table(spark, sfDir, "part")),
+      ("supplier", "s_suppkey", ListMap("s" -> Hierarchy(
+        "s_nationkey" -> Seq.empty, "s_suppkey" -> Seq("s_name"))),
+        Tpch.table(spark, sfDir, "supplier")))
+    val star = DataCube.fromStar(raw, ids, Tpch.measures, dims)
+    val parts = DataCube.build(Fact.build(raw, ids, Tpch.measures),
+      dims.map { case (n, k, hs, df) => Dimension.build(n, k, hs, df) })
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(rows(star.fact.data) == rows(parts.fact.data))
+    assert(star.dimensions.keys == parts.dimensions.keys)
+    star.dimensions.keys.foreach { n =>
+      assert(rows(star.dimensions(n).denormalized) ==
+        rows(parts.dimensions(n).denormalized), n)
+    }
   }
 
   test("denormalize joins every dimension's attributes") {

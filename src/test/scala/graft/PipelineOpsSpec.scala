@@ -8,7 +8,29 @@ import graft.operators.{Dedup, Events, Multimodal, Sampling, Similarity}
   * approximation quality, multimodal plumbing. sf0.001 fixtures. */
 class PipelineOpsSpec extends SparkSpec {
 
+  import spark.implicits._
+
   private lazy val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+
+  /** Deterministic synthetic media table: `rows` blobs of pseudo-random
+    * bytes with metadata, built distributed from spark.range. */
+  private def syntheticMedia(rows: Int) = {
+    val types = array(lit("image"), lit("audio"), lit("video"))
+    spark.range(rows.toLong).toDF("media_id")
+      .withColumn("content",
+        unhex(repeat(substring(md5(col("media_id").cast("string")), 1, 16), 4)))
+      .withColumn("media_type", element_at(types, (col("media_id") % 3 + 1).cast("int")))
+      .withColumn("meta", struct(
+        col("media_type"),
+        when(col("media_type") === "image", lit("png"))
+          .when(col("media_type") === "audio", lit("wav"))
+          .otherwise(lit("mp4")).as("format"),
+        when(col("media_type") === "image", lit(64)).otherwise(lit(null).cast("int")).as("width"),
+        when(col("media_type") === "image", lit(64)).otherwise(lit(null).cast("int")).as("height"),
+        when(col("media_type") =!= "image", col("media_id") * 1000 + 1000)
+          .otherwise(lit(null).cast("long")).as("duration_ms")))
+      .select("media_id", "content", "meta")
+  }
   private lazy val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
 
   test("minhash LSH finds every exact near-dup pair (recall = 1 here)") {
@@ -388,7 +410,8 @@ class PipelineOpsSpec extends SparkSpec {
     val media = Seq((1L, base), (2L, noised), (3L, other),
       (4L, Array[Byte](9, 9, 9))) // undecodable row dropped
       .toDF("media_id", "content")
-    val pairs = Multimodal.audioNearDupPairs(media, maxHamming = 5)
+    val pairs = Dedup.hammingPairs(Multimodal.audioHashes(media), "media_id",
+        "audio_hash", bits = 64, maxHamming = 5)
       .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 2L)), s"expected only (base, noised), got $pairs")
   }
@@ -958,7 +981,8 @@ class PipelineOpsSpec extends SparkSpec {
     // large k: incrementally-maintained store == from-scratch rebuild,
     // including cells the build never saw (d3) and untouched cells (d2)
     val store = java.nio.file.Files.createTempDirectory("hh_cube").toString + "/c"
-    Sketches.saveTermSummaryCube(a, store, Seq("g"), "term", "g", k = 64)
+    Sketches.termSummaryAtGrain(a, Seq("g"), "term", k = 64)
+      .write.partitionBy("g").parquet(store)
     val touched = Sketches.ingestTermSummary(spark, store, b,
       Seq("g"), "term", "g", k = 64)
     assert(touched == 2) // d1 merged, d3 created; d2 untouched
@@ -979,7 +1003,8 @@ class PipelineOpsSpec extends SparkSpec {
     // small k: a merged cell beyond k compresses with the MG cut — size
     // stays bounded, the heavy term survives, bound covers the est gap
     val store2 = java.nio.file.Files.createTempDirectory("hh_cube2").toString + "/c"
-    Sketches.saveTermSummaryCube(a, store2, Seq("g"), "term", "g", k = 2)
+    Sketches.termSummaryAtGrain(a, Seq("g"), "term", k = 2)
+      .write.partitionBy("g").parquet(store2)
     Sketches.ingestTermSummary(spark, store2, b, Seq("g"), "term", "g", k = 2)
     val d1 = cellsOf(spark.read.parquet(store2))("d1")
     assert(d1._1.size <= 2, s"merged cell must stay <= k entries: $d1")
@@ -1432,9 +1457,9 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("hash samples are nested across rates and stratified rates hold") {
-    val ids10 = Sampling.hashSample(docs, "doc_id", 0.1)
+    val ids10 = docs.filter(Sampling.hashUniform(col("doc_id")) < 0.1)
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val ids30 = Sampling.hashSample(docs, "doc_id", 0.3)
+    val ids30 = docs.filter(Sampling.hashUniform(col("doc_id")) < 0.3)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(ids10.subsetOf(ids30), "samples at growing rates must be nested")
     assert(ids30.size > ids10.size)
@@ -1557,7 +1582,7 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("multimodal feature extraction is deterministic with stable shape") {
-    val media = Multimodal.syntheticMedia(spark, 30)
+    val media = syntheticMedia(30)
     assert(media.schema("content").dataType.typeName == "binary")
     val f1 = Multimodal.extractFeatures(media, dim = 8).collect()
       .sortBy(_.media_id)
@@ -1571,7 +1596,7 @@ class PipelineOpsSpec extends SparkSpec {
   test("multimodal features compose with similarity search end-to-end") {
     // decode (stub) -> feature vectors -> brute kNN over them: the full
     // media-dedup pipeline shape with only the codec faked
-    val media = Multimodal.syntheticMedia(spark, 40)
+    val media = syntheticMedia(40)
     val feats = Multimodal.extractFeatures(media, dim = 16).toDF()
       .select(col("media_id").as("vec_id"), col("features").as("embedding"))
     val q = feats.filter(col("vec_id") < 2)
@@ -1721,17 +1746,6 @@ class PipelineOpsSpec extends SparkSpec {
       .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 2L)),
       s"one-frame edit must pair, inversion must not: $pairs")
-  }
-
-  test("frame sampling explodes only videos with monotone offsets") {
-    val media = Multimodal.syntheticMedia(spark, 30)
-    val frames = Multimodal.sampleFrames(media, 4)
-    val videos = media.filter(col("meta.media_type") === "video").count()
-    assert(frames.count() == videos * 4)
-    val oneVid = frames.orderBy("media_id", "frame_idx")
-      .filter(col("media_id") === frames.select(min("media_id")).head().getLong(0))
-      .collect().map(_.getLong(2))
-    assert(oneVid.sameElements(oneVid.sorted))
   }
 
   test("chunking covers every token; stride=width partitions exactly") {
@@ -2105,7 +2119,7 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("writeShards lays each shard down as one pos-ordered file") {
     val path = java.nio.file.Files.createTempDirectory("shards_out").toString
-    Sampling.writeShards(docs, "doc_id", numShards = 4, path)
+    Sampling.writeAssigned(Sampling.shuffleShards(docs, "doc_id", 4), 4, path)
     val expected = Sampling.shuffleShards(docs, "doc_id", 4)
       .select("doc_id", "shard", "pos").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
@@ -3248,6 +3262,36 @@ class PipelineOpsSpec extends SparkSpec {
     }
     // fixture docs are clean prose-like token streams: most should pass
     assert(out.count(_.getInt(8) == 1) > out.length / 2)
+  }
+
+  // ------------------------------------------------------------------
+  // nearDupDelta restructure equivalence
+  // ------------------------------------------------------------------
+
+  test("nearDupDelta after the r18 Par restructure: cross hits drop the " +
+    "whole delta component, fresh components keep their min id, and a " +
+    "provided carved index gives the same survivors as the built one") {
+    val mk = (id: Long, t: String) => (id, t)
+    val corpusDocs = Seq(
+      mk(2L, "alpha beta gamma delta epsilon zeta eta theta"),
+      mk(4L, "one two three four five six seven eight")
+    ).toDF("doc_id", "text")
+    val deltaDocs = Seq(
+      mk(1L, "alpha beta gamma delta epsilon zeta eta theta"), // cross dup
+      mk(3L, "nine ten eleven twelve thirteen fourteen fifteen"), // fresh
+      mk(5L, "nine ten eleven twelve thirteen fourteen fifteen")  // twin of 3
+    ).toDF("doc_id", "text")
+    val corpusIdx = Dedup.buildShingleIndex(corpusDocs, "doc_id", "text", 3)
+    val (survBuilt, deltaIdx) = Dedup.nearDupDelta(
+      Some(corpusIdx), deltaDocs, "doc_id", "text")
+    assert(survBuilt.select("doc_id").as[Long].collect().sorted.toSeq ==
+      Seq(3L), "1 drops (cross), 3 survives (component min), 5 drops")
+    // carved-index form: same survivors
+    val (survCarved, _) = Dedup.nearDupDelta(
+      Some(corpusIdx), deltaDocs, "doc_id", "text",
+      deltaShinglesDf = Some(deltaIdx))
+    assert(survCarved.select("doc_id").as[Long].collect().sorted.toSeq ==
+      Seq(3L))
   }
 }
 

@@ -263,7 +263,7 @@ class Round15Spec extends SparkSpec {
     // post-append drift: append the corpus onto itself → frac 0.5.
     // No mtime guard needed: the stamp is a file-name manifest, so
     // attribution is membership-based and clock-granularity-independent
-    // (Round16Spec pins the same-tick case explicitly).
+    // (AnnIndexSpec pins the same-tick case explicitly).
     val assign = spark.read.parquet(s"$dir/corpus")
       .select(col("neighbor_id"), col("cv"), col("cell"))
     Similarity.appendToIvfIndex(assign, dir)

@@ -2,13 +2,15 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Events
-import graft.streaming.EventsStreaming
+import graft.operators.{Corpus, Events, Similarity}
+import graft.streaming.{DocStreaming, EventsStreaming, StoreCompaction, VecStreaming}
 
 /** Structured Streaming vs batch equivalence: the same window expression
   * over readStream (AvailableNow, memory sink) must produce the batch
   * answer once the stream drains. */
 class StreamingSpec extends SparkSpec {
+
+  import spark.implicits._
 
   /** File stream sources need a directory — stage the single fixture file
     * into a temp dir. */
@@ -23,7 +25,10 @@ class StreamingSpec extends SparkSpec {
   test("streaming windowed counts equal the batch tumbling aggregation") {
     val stream = EventsStreaming.readEvents(spark, streamDir)
     val agg = EventsStreaming.windowedCounts(stream, "1 hour", "2 hours")
-    val q = EventsStreaming.startToMemory(agg, "win_test")
+    val q = agg.writeStream.format("memory").queryName("win_test")
+      .outputMode("update")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
     q.awaitTermination(120000)
 
     val streamed = spark.table("win_test")
@@ -797,5 +802,303 @@ class StreamingSpec extends SparkSpec {
     assert(batch.except(streamed).count() == 0,
       "streaming join dropped a pair batch attribution has")
     assert(streamed.count() == batch.count(), "pair multiplicity diverged")
+  }
+
+  // ------------------------------------------------------------------
+  // streaming health hook
+  // ------------------------------------------------------------------
+
+  test("startNearDupDedup healthEveryN writes a per-batch health row " +
+    "after the batch's append lands") {
+    import graft.streaming.VecStreaming
+    def vec(seed: Int): Array[Float] = {
+      val r = new scala.util.Random(seed)
+      Array.fill(16)(r.nextGaussian().toFloat)
+    }
+    val corpus = (0 until 20).map(i => (i.toLong, vec(i)))
+      .toDF("vec_id", "embedding")
+    val indexDir = java.nio.file.Files
+      .createTempDirectory("vec_health_idx").toString
+    Similarity.saveIvfIndex(corpus, indexDir, nlist = 4, replicate = 1)
+    val in = java.nio.file.Files.createTempDirectory("vec_health_in").toString
+    val surv = java.nio.file.Files.createTempDirectory("vec_health_s").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("vec_health_c").toString
+    Seq((100L, vec(300)), (101L, vec(400)))
+      .toDF("vec_id", "embedding").coalesce(1)
+      .write.mode("append").parquet(in)
+    val stream = spark.readStream.schema(corpus.schema).parquet(in)
+    val q = VecStreaming.startNearDupDedup(stream, "vec_id", "embedding",
+      indexDir, surv, ckpt, threshold = 0.95, nprobe = 4, dim = 16,
+      replicate = 1, healthEveryN = 1)
+    q.awaitTermination(120000)
+    val h = spark.read.parquet(s"$indexDir/health/batch=0").collect()
+    assert(h.length == 1, "exactly one health row per checked batch")
+    val row = h.head
+    // the check runs AFTER the batch's own append: the streamed rows are
+    // already counted on the appended side
+    assert(row.getAs[Long]("rows_appended") >= 2)
+    assert(row.getAs[Long]("rows_total") >= 22)
+  }
+
+  test("storeHealth: footer census over a per-batch store, compaction " +
+    "recommendation fires past the live-batch bound and clears after " +
+    "compactStore") {
+    import graft.streaming.DocStreaming
+    val dir = java.nio.file.Files.createTempDirectory("storehealth").toString
+    (0 until 5).foreach { b =>
+      Seq((b.toLong * 10, s"s$b")).toDF("doc_id", "s")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/batch=$b")
+    }
+    val h1 = DocStreaming.storeHealth(spark, dir, maxLiveBatches = 3)
+      .collect().head
+    assert(h1.getAs[Int]("batches_live") == 5)
+    assert(!h1.getAs[Boolean]("has_compacted"))
+    assert(h1.getAs[Long]("rows_total") == 5 &&
+      h1.getAs[Long]("rows_live") == 5)
+    assert(h1.getAs[Boolean]("recommend_compaction"))
+    assert(h1.getAs[String]("reason").contains("compactStore"))
+    DocStreaming.compactStore(spark, dir)
+    val h2 = DocStreaming.storeHealth(spark, dir, maxLiveBatches = 3)
+      .collect().head
+    // compaction folds every batch except the newest into batch=-1
+    assert(h2.getAs[Int]("batches_live") == 1)
+    assert(h2.getAs[Boolean]("has_compacted"))
+    assert(h2.getAs[Long]("rows_total") == 5)
+    assert(h2.getAs[Long]("rows_compacted") == 4)
+    assert(!h2.getAs[Boolean]("recommend_compaction"))
+  }
+
+  // ------------------------------------------------------------------
+  // maintainStore: the compaction loop
+  // ------------------------------------------------------------------
+
+  /** Per-batch store fixture: `nBatches` partitions, one row per
+    * (doc, batch) with s = batch — every row globally unique, so all
+    * counts are construction arithmetic. */
+  private def plantStore(nBatches: Int, nDocs: Int = 5): String = {
+    val dir = java.nio.file.Files.createTempDirectory("maintstore").toString
+    spark.range(nDocs).select(col("id").as("doc_id"))
+      .withColumn("batch",
+        explode(sequence(lit(0L), lit(nBatches - 1L))))
+      .select(col("doc_id"), col("batch").as("s"), col("batch"))
+      .write.mode("overwrite").partitionBy("batch").parquet(dir)
+    dir
+  }
+
+  test("maintainStore fires once past the live-batch bound, loses and " +
+    "duplicates nothing, and the next tick is a healthy no-op that " +
+    "touches no file") {
+    val dir = plantStore(nBatches = 6, nDocs = 5)
+    val r1 = DocStreaming.maintainStore(spark, dir, maxLiveBatches = 3)
+      .collect().head
+    assert(r1.getAs[Int]("batches_live") == 6)
+    assert(r1.getAs[Boolean]("recommend_compaction") &&
+      r1.getAs[Boolean]("compacted"))
+    assert(spark.read.parquet(dir).count() == 30,
+      "compaction must preserve every planted row")
+    // partition discovery infers `batch` as int — normalize to long
+    val batches = spark.read.parquet(dir)
+      .select(col("batch").cast("long")).distinct()
+      .collect().map(_.getLong(0)).sorted
+    assert(batches.sameElements(Array(-1L, 5L)),
+      "everything below the newest batch folds into batch=-1")
+    // second tick: healthy no-op — row says so and no file changes
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def census() = graft.util.ParquetMeta
+      .parquetFiles(fs, new org.apache.hadoop.fs.Path(dir))
+      .map(st => (st.getPath.toString, st.getModificationTime, st.getLen))
+      .sortBy(_._1)
+    val before = census()
+    val r2 = DocStreaming.maintainStore(spark, dir, maxLiveBatches = 3)
+      .collect().head
+    assert(!r2.getAs[Boolean]("compacted") &&
+      !r2.getAs[Boolean]("recommend_compaction"))
+    assert(r2.getAs[Int]("batches_live") == 1 &&
+      r2.getAs[Boolean]("has_compacted"))
+    assert(r2.getAs[Long]("rows_live") == 5 &&
+      r2.getAs[Long]("rows_compacted") == 25)
+    assert(census() == before, "a healthy tick must not touch the store")
+  }
+
+  test("maintainStore never claims a compaction that did not run: a " +
+    "fired recommendation over a store with nothing mergeable reports " +
+    "compacted = false") {
+    // 2 batches > maxLiveBatches = 1 fires the recommendation, but only
+    // ONE partition sits below the newest — compact() has nothing to
+    // fold and must not be reported as having run
+    val dir = plantStore(nBatches = 2, nDocs = 3)
+    val r = DocStreaming.maintainStore(spark, dir, maxLiveBatches = 1)
+      .collect().head
+    assert(r.getAs[Boolean]("recommend_compaction"))
+    assert(!r.getAs[Boolean]("compacted"),
+      "nothing merged — the tick row must say so")
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/batch=-1")))
+    assert(spark.read.parquet(dir).count() == 6, "store untouched")
+  }
+
+  test("maintainStore on a healthy store runs no jobs beyond the " +
+    "footer census (metadata-sized no-op)") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = plantStore(nBatches = 2, nDocs = 3)
+    def countJobs(marker: String)(body: => Unit): Int = {
+      val jobs = new AtomicInteger(0)
+      val seen = new CountDownLatch(1)
+      val l = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit = {
+          val g = Option(js.properties)
+            .map(_.getProperty("spark.jobGroup.id", "")).getOrElse("")
+          if (g == marker) seen.countDown() else jobs.incrementAndGet()
+        }
+      }
+      spark.sparkContext.addSparkListener(l)
+      try {
+        body
+        spark.sparkContext.setJobGroup(marker, "flush")
+        spark.range(1).count()
+        spark.sparkContext.clearJobGroup()
+        assert(seen.await(60, TimeUnit.SECONDS), "listener bus never flushed")
+        jobs.get()
+      } finally spark.sparkContext.removeSparkListener(l)
+    }
+    val censusJobs = countJobs("graft-store-census") {
+      StoreCompaction.storeHealth(spark, dir).collect(): Unit
+    }
+    val maintJobs = countJobs("graft-store-noop") {
+      val row = DocStreaming.maintainStore(spark, dir).collect().head
+      assert(!row.getAs[Boolean]("compacted"))
+    }
+    assert(maintJobs <= censusJobs + 1,
+      s"healthy maintainStore ran $maintJobs jobs vs $censusJobs for " +
+        "the bare census — it must add nothing beyond the measurement")
+  }
+
+  test("VecStreaming.maintainStore keeps the compacted appends " +
+    "cell-partitioned so probe-side pruning survives compaction") {
+    val root = java.nio.file.Files.createTempDirectory("vecmaint").toString
+    val appends = s"$root/appends"
+    // plant 4 append batches of cell-assigned vectors
+    (0 until 4).foreach { b =>
+      Seq((b * 10L, Seq(1.0, 0.0), b % 2), (b * 10L + 1, Seq(0.0, 1.0),
+          (b + 1) % 2))
+        .toDF("neighbor_id", "cv", "cell")
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$appends/batch=$b")
+    }
+    val r = VecStreaming.maintainStore(spark, root, maxLiveBatches = 2)
+      .collect().head
+    assert(r.getAs[Boolean]("compacted"))
+    val snap = spark.read.parquet(appends)
+    assert(snap.count() == 8, "compaction must preserve every vector")
+    val fs = new org.apache.hadoop.fs.Path(appends)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    // the batch=-1 snapshot is itself hive-partitioned by cell
+    assert(fs.exists(new org.apache.hadoop.fs.Path(
+      s"$appends/batch=-1/cell=0")) &&
+      fs.exists(new org.apache.hadoop.fs.Path(s"$appends/batch=-1/cell=1")),
+      "compacted snapshot must stay cell-partitioned for probe pruning")
+  }
+
+  // ------------------------------------------------------------------
+  // DocStreaming health hook
+  // ------------------------------------------------------------------
+
+  test("DocStreaming.startNearDupDedup healthEveryN writes a per-batch " +
+    "store-health row OUTSIDE the store root") {
+    val in = java.nio.file.Files.createTempDirectory("doc_health_in").toString
+    val store = java.nio.file.Files
+      .createTempDirectory("doc_health_st").toString + "/store"
+    val surv = java.nio.file.Files.createTempDirectory("doc_health_s").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("doc_health_c").toString
+    Seq((1L, "alpha beta gamma delta"), (2L, "epsilon zeta eta theta"))
+      .toDF("doc_id", "text").coalesce(1)
+      .write.mode("append").parquet(in)
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("doc_id",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("text",
+        org.apache.spark.sql.types.StringType)))
+    val stream = spark.readStream.schema(schema).parquet(in)
+    val q = DocStreaming.startNearDupDedup(stream, "doc_id", "text",
+      store, surv, ckpt, healthEveryN = 1)
+    q.awaitTermination(120000)
+    val h = spark.read.parquet(s"${store}_health/batch=0").collect()
+    assert(h.length == 1, "exactly one health row per checked batch")
+    val row = h.head
+    // the check runs AFTER the batch's own store write: its shingles
+    // are already counted on the live side
+    assert(row.getAs[Int]("batches_live") == 1)
+    assert(row.getAs[Long]("rows_live") > 0)
+    assert(!row.getAs[Boolean]("recommend_compaction"))
+    // the store root itself stays pure batch= partitions (readable)
+    assert(spark.read.parquet(store).columns.contains("batch"))
+  }
+
+  test("startBm25Ingest healthEveryN writes a postings-store health row " +
+    "under the store's health/ dir (outside the probed sub-stores)") {
+    val in = java.nio.file.Files.createTempDirectory("bm25h_in").toString
+    val store = java.nio.file.Files
+      .createTempDirectory("bm25h_st").toString + "/idx"
+    val ckpt = java.nio.file.Files.createTempDirectory("bm25h_c").toString
+    Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta"))
+      .toDF("doc_id", "text").coalesce(1)
+      .write.mode("append").parquet(in)
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("doc_id",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("text",
+        org.apache.spark.sql.types.StringType)))
+    val stream = spark.readStream.schema(schema).parquet(in)
+    val q = DocStreaming.startBm25Ingest(stream, "doc_id", "text",
+      store, ckpt, healthEveryN = 1)
+    q.awaitTermination(120000)
+    val h = spark.read.parquet(s"$store/health/batch=0").collect()
+    assert(h.length == 1)
+    assert(h.head.getAs[Int]("batches_live") == 1)
+    assert(!h.head.getAs[Boolean]("recommend_compaction"))
+    // the store still searches: health/ is invisible to the probe
+    val res = Corpus.bm25SearchStored(spark, store,
+      Seq((1L, "alpha")).toDF("query_id", "qtext"), "query_id", "qtext",
+      k = 2).collect()
+    assert(res.length == 1 && res.head.getAs[Long]("doc_id") == 1L)
+  }
+
+  // ------------------------------------------------------------------
+  // BM25 store maintenance
+  // ------------------------------------------------------------------
+
+  test("maintainBm25Store compacts all three sub-stores past the bound " +
+    "and the compacted store still ranks exactly like a full rebuild") {
+    val docsDf = spark.read.parquet(s"$sfDir/documents.parquet")
+      .filter(col("doc_id") < 40)
+    val root = java.nio.file.Files
+      .createTempDirectory("bm25_maint").toString + "/idx"
+    Corpus.saveBm25Store(docsDf.filter(col("doc_id") < 10),
+      "doc_id", "text", root)
+    (1 to 3).foreach { i =>
+      Corpus.refreshBm25Store(
+        docsDf.filter(col("doc_id") >= i * 10 && col("doc_id") < (i + 1) * 10),
+        "doc_id", "text", root)
+    }
+    val r1 = Corpus.maintainBm25Store(spark, root, maxLiveBatches = 2)
+      .collect().head
+    assert(r1.getAs[Boolean]("recommend_compaction") &&
+      r1.getAs[Boolean]("compacted"))
+    val r2 = Corpus.maintainBm25Store(spark, root, maxLiveBatches = 2)
+      .collect().head
+    assert(!r2.getAs[Boolean]("compacted"), "second tick is a no-op")
+    val qs = Seq((1L, "spark table scan"), (2L, "customer value"))
+      .toDF("query_id", "qtext")
+    val stored = Corpus.bm25SearchStored(spark, root, qs,
+      "query_id", "qtext", k = 8).orderBy("query_id", "rank").collect()
+    val oneShot = Corpus.bm25Search(
+      Corpus.bm25Index(docsDf, "doc_id", "text"), qs,
+      "query_id", "qtext", k = 8).orderBy("query_id", "rank").collect()
+    assert(stored.sameElements(oneShot),
+      "compacted store must rank exactly like a full rebuild")
   }
 }

@@ -2,18 +2,70 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, EntityResolution}
-
-/** Round-18 optimization laws: the stage-materialization policy switch
-  * (local vs reliable checkpoint, one conf — the round-17 verdict's
-  * localCheckpoint-proliferation item), Par.run's no-cancel +
-  * suppressed-failure contract, Jobs.labeled description restoration,
-  * and the restructured resolveDeltaMulti / nearDupDelta equivalences
-  * (their outputs are also oracle-pinned per round; these are the
-  * operator-level laws). */
-class Round18Spec extends SparkSpec {
+/** Engine utilities and driver helpers: the `Stage.materialize` policy,
+  * `Par.run`'s failure contract, `Jobs.labeled` restoration, the bench
+  * record comparator and the scale-probe replica ids. */
+class UtilSpec extends SparkSpec {
 
   import spark.implicits._
+
+  // ------------------------------------------------------------------
+  // collision-proof scale replicas
+  // ------------------------------------------------------------------
+
+  test("replicateDocs ids stay unique and replica-disjoint past the old " +
+    "10M stride; negative ids fail by name") {
+    val docs = Seq((9999999L, "x y"), (10000001L, "p q"), (0L, "a b"))
+      .toDF("doc_id", "text")
+    val out = ScaleProbe.replicateDocs(docs, 3)
+      .collect().map(r => (r.getLong(0), r.getString(1)))
+    assert(out.map(_._1).distinct.length == 9,
+      "replica ids must be unique for ids past the old additive stride")
+    // replica-disjoint shingles: every token carries its replica suffix
+    assert(out.forall { case (_, t) =>
+      t.split(" ").forall(w => w.endsWith("_0") || w.endsWith("_1") ||
+        w.endsWith("_2")) })
+    val neg = Seq((-1L, "a")).toDF("doc_id", "text")
+    val e = intercept[Exception] {
+      ScaleProbe.replicateDocs(neg, 2).collect()
+    }
+    def messages(t: Throwable): String =
+      if (t == null) "" else Option(t.getMessage).getOrElse("") +
+        messages(t.getCause)
+    assert(messages(e).contains("negative doc_id"))
+  }
+
+  // ------------------------------------------------------------------
+  // bench cross-round comparator
+  // ------------------------------------------------------------------
+
+  test("BenchCompare.parsePrevMins reads both artifact generations " +
+    "(query_stats wins over flat queries, failed sentinels dropped) " +
+    "and latestRecord picks the highest round") {
+    // r16+ shape: query_stats with min/med/max; flat queries alongside
+    val modern = """{"queries":{"q1":2.5,"q2":1.0,"q3":-1.0},
+      |"query_stats":{"q1":{"min":2.0,"med":2.5,"max":3.0,
+      |"suspect":false},"q3":{"min":-1.0,"med":-1.0,"max":-1.0,
+      |"suspect":false}}}""".stripMargin.replace("\n", "")
+    val m = BenchCompare.parsePrevMins(modern)
+    assert(m("q1") == 2.0, "query_stats.min wins over the flat value")
+    assert(m("q2") == 1.0, "flat fallback for entries without stats")
+    assert(!m.contains("q3"), "failed sentinel (-1) must be dropped")
+    // r15-and-earlier shape: flat queries only (values were min-of-reps)
+    val legacy = """{"queries":{"q1":3.25,"build_cube":10.5}}"""
+    val l = BenchCompare.parsePrevMins(legacy)
+    assert(l == Map("q1" -> 3.25, "build_cube" -> 10.5))
+    // latestRecord: highest round number wins, other files ignored
+    val dir = java.nio.file.Files.createTempDirectory("benchrec")
+    for (n <- Seq(2, 10, 9)) java.nio.file.Files.write(
+      dir.resolve(s"BENCH_REPS10_r$n.json"), "{}".getBytes("UTF-8"))
+    java.nio.file.Files.write(
+      dir.resolve("BENCH_r99.json"), "{}".getBytes("UTF-8"))
+    assert(BenchCompare.latestRecord(dir).map(_.getFileName.toString)
+      .contains("BENCH_REPS10_r10.json"))
+    assert(BenchCompare.latestRecord(
+      java.nio.file.Files.createTempDirectory("benchempty")).isEmpty)
+  }
 
   // ------------------------------------------------------------------
   // Stage.materialize policy
@@ -87,63 +139,5 @@ class Round18Spec extends SparkSpec {
     graft.util.Jobs.labeled(sc, "solo")(())
     assert(sc.getLocalProperty("spark.job.description") == null,
       "a null previous description must be restored as null")
-  }
-
-  // ------------------------------------------------------------------
-  // resolveDeltaMulti restructure equivalence
-  // ------------------------------------------------------------------
-
-  test("resolveDeltaMulti after the r18 restructure: adoption minimum " +
-    "still propagates to every component member, components with no " +
-    "adopted member keep their component-min id, non-edge records keep " +
-    "their own id") {
-    // corpus: two stored entities under nation blocking
-    val corpus = Seq(
-      (100L, "smith", 1), (101L, "smith", 1), // entity 100
-      (200L, "jones", 2)                      // entity 200
-    ).toDF("rid", "name", "blk")
-    val stored = EntityResolution.resolve(corpus, "rid", "name", "blk", 1)
-    val delta = Seq(
-      (300L, "smith", 1),  // adopts 100 directly
-      (301L, "smyth", 1),  // within-delta edge to 300 (dist 1) → adopts 100
-      (400L, "zzzzz", 2),  // fresh pair: new entity labeled by min id
-      (401L, "zzzzz", 2),
-      (500L, "alone", 3)   // isolated, matches nothing: keeps own id
-    ).toDF("rid", "name", "blk")
-    val got = EntityResolution.resolveDelta(stored, delta, "rid", "name",
-      "blk", 1).select("rid", "entity_id").as[(Long, Long)]
-      .collect().toMap
-    assert(got == Map(300L -> 100L, 301L -> 100L,
-      400L -> 400L, 401L -> 400L, 500L -> 500L))
-  }
-
-  // ------------------------------------------------------------------
-  // nearDupDelta restructure equivalence
-  // ------------------------------------------------------------------
-
-  test("nearDupDelta after the r18 Par restructure: cross hits drop the " +
-    "whole delta component, fresh components keep their min id, and a " +
-    "provided carved index gives the same survivors as the built one") {
-    val mk = (id: Long, t: String) => (id, t)
-    val corpusDocs = Seq(
-      mk(2L, "alpha beta gamma delta epsilon zeta eta theta"),
-      mk(4L, "one two three four five six seven eight")
-    ).toDF("doc_id", "text")
-    val deltaDocs = Seq(
-      mk(1L, "alpha beta gamma delta epsilon zeta eta theta"), // cross dup
-      mk(3L, "nine ten eleven twelve thirteen fourteen fifteen"), // fresh
-      mk(5L, "nine ten eleven twelve thirteen fourteen fifteen")  // twin of 3
-    ).toDF("doc_id", "text")
-    val corpusIdx = Dedup.buildShingleIndex(corpusDocs, "doc_id", "text", 3)
-    val (survBuilt, deltaIdx) = Dedup.nearDupDelta(
-      Some(corpusIdx), deltaDocs, "doc_id", "text")
-    assert(survBuilt.select("doc_id").as[Long].collect().sorted.toSeq ==
-      Seq(3L), "1 drops (cross), 3 survives (component min), 5 drops")
-    // carved-index form: same survivors
-    val (survCarved, _) = Dedup.nearDupDelta(
-      Some(corpusIdx), deltaDocs, "doc_id", "text",
-      deltaShinglesDf = Some(deltaIdx))
-    assert(survCarved.select("doc_id").as[Long].collect().sorted.toSeq ==
-      Seq(3L))
   }
 }
