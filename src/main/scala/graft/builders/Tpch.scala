@@ -4,6 +4,7 @@ import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.model._
 import graft.util.SessionMemo
@@ -33,8 +34,24 @@ import graft.util.SessionMemo
   */
 object Tpch {
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The input table `name` of a fixture directory. A `read.parquet`
+    * without a schema runs one Spark job on every call to infer it from
+    * the footers; this reader infers it once per (session, path,
+    * modification time) and reads with `.schema`, which runs none. The
+    * modification time is part of the key, so a table rewritten under
+    * the same path is inferred again. A missing table fails by name. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    require(fs.exists(p), s"$path does not exist — not an input table")
+    val stamp = fs.getFileStatus(p).getModificationTime
+    spark.read.schema(schemas.get(spark, s"$stamp|$path")).parquet(path)
+  }
+
+  private val schemas = new SessionMemo[StructType]("input_schemas",
+    build = (s, key) => s.read.parquet(key.substring(key.indexOf('|') + 1)).schema,
+    fill = _ => (), release = _ => ())
 
   /** The fact input: FKs renamed to dimension key names (the reference
     * requires fact id.vars == dimension keys, R/data.cube.R:46-59) plus a

@@ -464,15 +464,19 @@ object Similarity {
 
   /** Validated centroid read of a [[saveIvfIndex]] layout — fails fast
     * with a named error (missing dir, empty table) instead of the bare
-    * Spark analysis error a consuming plan would otherwise surface. */
-  private def readCentroids(spark: org.apache.spark.sql.SparkSession,
+    * Spark analysis error a consuming plan would otherwise surface. One
+    * job: the read takes the schema every centroid write produces
+    * (`(Int, Seq[Double])` as `cell`, `centroid`) instead of inferring
+    * it, and the ≤ nlist rows are ordered by `cell` on the driver. */
+  private[graft] def readCentroids(spark: org.apache.spark.sql.SparkSession,
                             path: String): Array[Array[Double]] = {
     val dir = new org.apache.hadoop.fs.Path(s"$path/centroids")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(dir),
       s"$path/centroids does not exist — not a saveIvfIndex layout")
-    val cents = spark.read.parquet(s"$path/centroids")
-      .orderBy("cell").collect()
+    val cents = spark.read.schema("cell INT, centroid ARRAY<DOUBLE>")
+      .parquet(s"$path/centroids").collect()
+      .sortBy(_.getInt(0))
       .map(_.getSeq[Double](1).toArray)
     require(cents.nonEmpty, s"$path/centroids is empty — not a saveIvfIndex layout")
     cents

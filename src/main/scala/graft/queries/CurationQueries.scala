@@ -206,7 +206,7 @@ private[queries] trait CurationQueries { self: ExtensionQueryHelpers =>
   def q77(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Quality
     import graft.operators.Quality._
-    val orders = s.read.parquet(s"$dir/orders.parquet")
+    val orders = Tpch.table(s, dir, "orders")
     sorted(Quality.audit(orders, Seq(
       NotNull("o_custkey"),
       Unique(Seq("o_orderkey")),

@@ -17,16 +17,29 @@ import graft.util.SessionMemo
   * per-family file split — everything still resolves through the single
   * `ExtensionQueries` object; this trait only holds what more than one
   * family needs (`private[queries]`; the memos are `private[graft]` so
-  * the bench can list them in `SparkEntry.builds`).
+  * the bench can list them in `SparkEntry.builds`, and so is `sorted`,
+  * which [[ParityQueries]] and PlanSpec share).
   */
 private[queries] trait ExtensionQueryHelpers {
 
 
-  private[queries] def sorted(df: DataFrame): DataFrame =
-    df.orderBy(df.columns.map(c => col(c).asc_nulls_first).toSeq: _*)
+  /** A catalogue answer in its canonical order: every column ascending,
+    * NULLs first. It is sorted inside ONE partition rather than by a
+    * global `orderBy`: the range partitioner of a global sort first runs
+    * a sampling job over the exchange's child and then runs that child
+    * again for the shuffle, and catalogue answers are collected (or
+    * written as one file) anyway. So the upstream plan runs once, in
+    * parallel, and only the final sort is serial. The largest answer at
+    * sf0.1 is q28's 553,860 rows (the DuckDB oracles' row counts); the
+    * next is q51's 100,000, and 147 of the 158 have at most 9,375. Under
+    * `count()` the optimizer drops the sort, and every answer row, not a
+    * partial count, crosses the one-partition exchange. */
+  private[graft] def sorted(df: DataFrame): DataFrame =
+    df.repartition(1)
+      .sortWithinPartitions(df.columns.map(c => col(c).asc_nulls_first).toSeq: _*)
 
   private[queries] def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Tpch.table(s, dir, "documents")
 
   /** Shared 3-gram shingle index over documents — memoized and persisted
     * per (session, dir) so the dedup family (q19 Jaccard, q20 MinHash-LSH)
@@ -77,7 +90,7 @@ private[queries] trait ExtensionQueryHelpers {
   : (DataFrame, DataFrame) = neardupMemo.get(s, dir)
 
   private[queries] def emb(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    Tpch.table(s, dir, "embeddings")
   /** Fixture-generation-robust events reader — see Sources.readEvents
     * (handles both TIMESTAMP(NANOS)-as-long and TIMESTAMP(MICROS)/NTZ). */
   private[queries] def events(s: SparkSession, dir: String): DataFrame =

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.builders.Tpch
+import graft.queries.ExtensionQueries.sorted
 import graft.model._
 import graft.query.dsl._
 
@@ -32,9 +33,6 @@ object ParityQueries {
       |         COUNT(*) AS n
       |  FROM lineitem GROUP BY 1, 2, 3, 4
       |)""".stripMargin
-
-  private def sorted(df: DataFrame): DataFrame =
-    df.orderBy(df.columns.map(c => col(c).asc_nulls_first).toSeq: _*)
 
   private def money(df: DataFrame, cols: String*): DataFrame =
     cols.foldLeft(df)((d, c) =>

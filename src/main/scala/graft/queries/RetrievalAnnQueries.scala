@@ -526,7 +526,7 @@ private[queries] trait RetrievalAnnQueries { self: ExtensionQueryHelpers =>
   // -------------------------------------------------------------------
   def q95(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.EntityResolution
-    val c = s.read.parquet(s"$dir/customer.parquet")
+    val c = Tpch.table(s, dir, "customer")
     val base = c.filter(col("c_custkey") % 4 === 0)
       .select((col("c_custkey") * 4).as("rid"), col("c_name").as("name"),
         col("c_nationkey").as("nk"),
@@ -666,7 +666,7 @@ private[queries] trait RetrievalAnnQueries { self: ExtensionQueryHelpers =>
   // -------------------------------------------------------------------
   def q98(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.EntityResolution
-    val c = s.read.parquet(s"$dir/customer.parquet")
+    val c = Tpch.table(s, dir, "customer")
     val base = c.filter(col("c_custkey") % 4 === 0)
       .select((col("c_custkey") * 4).as("rid"), col("c_name").as("name"),
         col("c_nationkey").as("nk"))
@@ -866,7 +866,7 @@ private[queries] trait RetrievalAnnQueries { self: ExtensionQueryHelpers =>
   // -------------------------------------------------------------------
   def q101(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.EntityResolution
-    val c = s.read.parquet(s"$dir/customer.parquet")
+    val c = Tpch.table(s, dir, "customer")
     val base = c.filter(col("c_custkey") % 4 === 0)
       .select((col("c_custkey") * 4).as("rid"), col("c_name").as("name"),
         col("c_nationkey").as("nk"),
@@ -945,7 +945,7 @@ private[queries] trait RetrievalAnnQueries { self: ExtensionQueryHelpers =>
   def q107(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.EntityResolution
     val passes = Seq(Seq("nk"), Seq("sfx"))
-    val c = s.read.parquet(s"$dir/customer.parquet")
+    val c = Tpch.table(s, dir, "customer")
     val base = c.filter(col("c_custkey") % 4 === 0)
       .select((col("c_custkey") * 4).as("rid"), col("c_name").as("name"),
         col("c_nationkey").as("nk"))

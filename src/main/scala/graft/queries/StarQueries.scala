@@ -198,7 +198,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   //       arithmetic is exact in both engines — safe to hash-compare.
   // -------------------------------------------------------------------
   def q36(s: SparkSession, dir: String): DataFrame =
-    sorted(s.read.parquet(s"$dir/lineitem.parquet")
+    sorted(Tpch.table(s, dir, "lineitem")
       .groupBy("l_returnflag")
       .agg(percentile(col("l_quantity"), lit(0.5)).as("p50"),
         percentile(col("l_quantity"), lit(0.9)).as("p90"),
@@ -220,10 +220,10 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   //       varies within a part key group — a proper salt source.
   // -------------------------------------------------------------------
   def q37(s: SparkSession, dir: String): DataFrame = {
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tpch.table(s, dir, "lineitem")
       .select(col("l_partkey").as("p_partkey"), col("l_orderkey"),
         col("l_linenumber"), col("l_quantity"))
-    val part = s.read.parquet(s"$dir/part.parquet").select("p_partkey", "p_brand")
+    val part = Tpch.table(s, dir, "part").select("p_partkey", "p_brand")
     sorted(graft.model.Joins
       .saltedJoin(li, part, "p_partkey", salts = 8,
         saltSource = struct(col("l_orderkey"), col("l_linenumber")))
@@ -298,7 +298,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   //       margin at accuracy 10000.
   // -------------------------------------------------------------------
   def q50(s: SparkSession, dir: String): DataFrame = {
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tpch.table(s, dir, "lineitem")
     sorted(li.groupBy("l_returnflag")
       .agg(percentile(col("l_quantity"), lit(0.5)).as("p50"),
         percentile(col("l_quantity"), lit(0.9)).as("p90"),
@@ -377,7 +377,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   // -------------------------------------------------------------------
   def q54(s: SparkSession, dir: String): DataFrame =
     sorted(graft.model.Joins.skewReport(
-      s.read.parquet(s"$dir/lineitem.parquet"), "l_suppkey", k = 20))
+      Tpch.table(s, dir, "lineitem"), "l_suppkey", k = 20))
 
   val q54Sql: String =
     """WITH c AS (
@@ -444,7 +444,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   // -------------------------------------------------------------------
   def q61(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tpch.table(s, dir, "lineitem")
     val bands = Seq(
       ("low", 0.0, 15.0), ("mid", 10.0, 30.0),
       ("high", 25.0, 51.0), ("all", 0.0, 51.0)
@@ -486,7 +486,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   def q62(s: SparkSession, dir: String): DataFrame = {
     import graft.model.{Dimension, Fact}
     import graft.io.CubeIO
-    val orders = s.read.parquet(s"$dir/orders.parquet")
+    val orders = Tpch.table(s, dir, "orders")
       .withColumn("o_year", year(col("o_orderdate")))
     val base = orders.filter(col("o_orderdate") < "1998-01-01")
       .withColumn("cents", round(col("o_totalprice") * 100).cast("long"))
@@ -589,7 +589,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   def q64(s: SparkSession, dir: String): DataFrame = {
     import graft.model.{Dimension, Fact}
     import graft.io.CubeIO
-    val orders = s.read.parquet(s"$dir/orders.parquet")
+    val orders = Tpch.table(s, dir, "orders")
       .withColumn("o_year", year(col("o_orderdate")))
     val base = orders
       .withColumn("cents", round(col("o_totalprice") * 100).cast("long"))
@@ -642,8 +642,8 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   // -------------------------------------------------------------------
   def q66(s: SparkSession, dir: String): DataFrame = {
     import graft.model.{Dimension, Fact, Hierarchy}
-    val nation = s.read.parquet(s"$dir/nation.parquet")
-    val region = s.read.parquet(s"$dir/region.parquet")
+    val nation = Tpch.table(s, dir, "nation")
+    val region = Tpch.table(s, dir, "region")
     val nd = nation.join(region, col("n_regionkey") === col("r_regionkey"))
       .select(col("n_nationkey").as("nationkey"), col("n_name"), col("r_name"))
     def nationDim = Dimension.build("nation", "nationkey",
@@ -652,7 +652,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
         "nationkey" -> Seq("n_name"))), nd)
     val custCube = DataCube.build(
       Fact.build(
-        s.read.parquet(s"$dir/customer.parquet")
+        Tpch.table(s, dir, "customer")
           .select(col("c_nationkey").as("nationkey"),
             round(col("c_acctbal") * 100).cast("long").as("cbal"),
             lit(1L).as("one")),
@@ -661,7 +661,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
       Seq(nationDim))
     val suppCube = DataCube.build(
       Fact.build(
-        s.read.parquet(s"$dir/supplier.parquet")
+        Tpch.table(s, dir, "supplier")
           .select(col("s_nationkey").as("nationkey"),
             round(col("s_acctbal") * 100).cast("long").as("sbal"),
             lit(1L).as("one")),
@@ -761,7 +761,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   // -------------------------------------------------------------------
   def q68(s: SparkSession, dir: String): DataFrame = {
     import graft.model.{Dimension, Fact}
-    val base = s.read.parquet(s"$dir/orders.parquet")
+    val base = Tpch.table(s, dir, "orders")
       .withColumn("month", date_trunc("month", col("o_orderdate")))
       .withColumn("cents", round(col("o_totalprice") * 100).cast("long"))
     val cube = DataCube.build(
@@ -803,7 +803,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   // -------------------------------------------------------------------
   def q69(s: SparkSession, dir: String): DataFrame = {
     import graft.model.{Dimension, Fact}
-    val base = s.read.parquet(s"$dir/orders.parquet")
+    val base = Tpch.table(s, dir, "orders")
       .withColumn("o_year", year(col("o_orderdate")))
       .withColumn("cents", round(col("o_totalprice") * 100).cast("long"))
     val cube = DataCube.build(
@@ -840,7 +840,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   // -------------------------------------------------------------------
   def q70(s: SparkSession, dir: String): DataFrame = {
     import graft.model.{Dimension, Fact}
-    val base = s.read.parquet(s"$dir/orders.parquet")
+    val base = Tpch.table(s, dir, "orders")
       .withColumn("o_year", year(col("o_orderdate")))
       .withColumn("cents", round(col("o_totalprice") * 100).cast("long"))
       .withColumn("one", lit(1L))
@@ -927,8 +927,8 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   def q72(s: SparkSession, dir: String): DataFrame = {
     import graft.model.{Dimension, Fact, Hierarchy}
     import graft.io.CubeIO
-    val nation = s.read.parquet(s"$dir/nation.parquet")
-    val region = s.read.parquet(s"$dir/region.parquet")
+    val nation = Tpch.table(s, dir, "nation")
+    val region = Tpch.table(s, dir, "region")
     val flat = nation.join(region, col("n_regionkey") === col("r_regionkey"))
       .select(col("n_nationkey").as("nationkey"), col("n_name"), col("r_name"))
     def dimOf(d: DataFrame) = Dimension.build("nation", "nationkey",
@@ -937,7 +937,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
         "nationkey" -> Seq("n_name"))), d)
     val cube = DataCube.build(
       Fact.build(
-        s.read.parquet(s"$dir/customer.parquet")
+        Tpch.table(s, dir, "customer")
           .select(col("c_nationkey").as("nationkey"),
             round(col("c_acctbal") * 100).cast("long").as("bal"),
             lit(1L).as("one")),
@@ -978,7 +978,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   // -------------------------------------------------------------------
   def q73(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Sketches
-    val orders = s.read.parquet(s"$dir/orders.parquet")
+    val orders = Tpch.table(s, dir, "orders")
       .withColumn("o_year", year(col("o_orderdate")))
     val sketches = Sketches.distinctSketchAtGrain(orders,
       Seq("o_year", "o_orderpriority"), "o_custkey")
@@ -1113,7 +1113,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   // -------------------------------------------------------------------
   def q78(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Sketches
-    val orders = s.read.parquet(s"$dir/orders.parquet")
+    val orders = Tpch.table(s, dir, "orders")
       .withColumn("o_year", year(col("o_orderdate")))
     val grain = Seq("o_year", "o_orderpriority")
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_q78_skcube_" +
@@ -1160,7 +1160,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   def q79(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.AggregateNavigator
     import graft.operators.AggregateNavigator.NavMeasure
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tpch.table(s, dir, "lineitem")
       .withColumn("ship_year", year(col("l_shipdate")))
     val measures = Seq(
       NavMeasure("sum", "l_quantity", "sum_qty"),
@@ -1199,7 +1199,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   def q80(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.AggregateNavigator
     import graft.operators.AggregateNavigator.NavMeasure
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tpch.table(s, dir, "lineitem")
       .withColumn("ship_year", year(col("l_shipdate")))
     val measures = Seq(
       NavMeasure("sum", "l_quantity", "sum_qty"),
@@ -1318,7 +1318,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
     import graft.operators.AggregateNavigator
     import graft.operators.AggregateNavigator.NavMeasure
     import org.apache.spark.sql.streaming.Trigger
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tpch.table(s, dir, "lineitem")
       .withColumn("ship_year", year(col("l_shipdate")))
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_q84_nav_" +
       Integer.toHexString(dir.hashCode)
@@ -1447,7 +1447,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   def q102(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.AggregateNavigator
     import graft.operators.AggregateNavigator.NavMeasure
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tpch.table(s, dir, "lineitem")
       .withColumn("ship_year", year(col("l_shipdate")))
     val measures = Seq(
       NavMeasure("sum", "l_quantity", "sum_qty"),
@@ -1485,7 +1485,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   def q110(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.AggregateNavigator
     import graft.operators.AggregateNavigator.NavMeasure
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tpch.table(s, dir, "lineitem")
       .withColumn("ship_year", year(col("l_shipdate")))
     val measures = Seq(
       NavMeasure("sum", "l_quantity", "sum_qty"),
@@ -1521,7 +1521,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   //        verdict treatment (in-query 5% check vs exact, oracle pins 1).
   // -------------------------------------------------------------------
   def q123(s: SparkSession, dir: String): DataFrame = {
-    val o = s.read.parquet(s"$dir/orders.parquet")
+    val o = Tpch.table(s, dir, "orders")
     val cols = Seq("o_custkey", "o_orderstatus", "o_orderpriority")
     val prof = graft.operators.Profiler.profile(o, cols)
     val exact = o
@@ -1606,7 +1606,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   //        value, and only the verdict int crosses the hash.
   // -------------------------------------------------------------------
   def q127(s: SparkSession, dir: String): DataFrame = {
-    val o = s.read.parquet(s"$dir/orders.parquet")
+    val o = Tpch.table(s, dir, "orders")
     val qs = Seq(0.25, 0.5, 0.75)
     val qarr = array(qs.map(lit): _*)
     val prof = graft.operators.Profiler.profile(
@@ -1659,7 +1659,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   //        so the oracle replays the addresses bit-for-bit.
   // -------------------------------------------------------------------
   def q131(s: SparkSession, dir: String): DataFrame = {
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tpch.table(s, dir, "lineitem")
     sorted(graft.operators.Layout.zProfile(
       li, Seq("l_partkey", "l_suppkey"), bits = 8, prefixBits = 4))
   }
@@ -1702,7 +1702,7 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
   //        exact integer math — the oracle replays it with one window.
   // -------------------------------------------------------------------
   def q135(s: SparkSession, dir: String): DataFrame = {
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tpch.table(s, dir, "lineitem")
     val files = li.groupBy("l_orderkey").agg(count(lit(1)).as("bytes"))
     val plan = graft.operators.Layout.compactionPlan(
       files, Seq("l_orderkey"), "bytes", targetSize = 64)
@@ -1743,9 +1743,9 @@ private[queries] trait StarQueries { self: ExtensionQueryHelpers =>
     import graft.operators.Layout
     val root = s"${System.getProperty("java.io.tmpdir")}/graft_q148_bucketed_" +
       Integer.toHexString(dir.hashCode)
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tpch.table(s, dir, "lineitem")
       .select("l_orderkey", "l_extendedprice", "l_discount")
-    val ord = s.read.parquet(s"$dir/orders.parquet")
+    val ord = Tpch.table(s, dir, "orders")
       .select("o_orderkey", "o_orderpriority")
     // the two bucketed ingests are independent writes — overlap them
     // (guide §2.6 job overlap; different tables/paths). NOTE the

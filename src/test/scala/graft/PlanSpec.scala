@@ -982,4 +982,83 @@ class PlanSpec extends SparkSpec {
     assert(!nodes.contains("SortMergeJoinExec"),
       s"sqKnn must not sort-merge:\n${plan(out)}")
   }
+
+  // ------------------------------------------------------------------
+  // one pass per catalogue answer
+  // ------------------------------------------------------------------
+
+  /** The global sort catalogue answers used before `sorted`. */
+  private def orderByAll(df: DataFrame): DataFrame =
+    df.orderBy(df.columns.map(c => col(c).asc_nulls_first).toSeq: _*)
+
+  test("sorted keeps the global sort's row order: NULLs first, ties, non-ASCII") {
+    import spark.implicits._
+    val df = Seq[(Option[String], Option[Int], Double)](
+      (Some("é"), Some(1), 0.5), (None, Some(2), 1.0), (Some("a"), None, 2.0),
+      (Some("日本"), Some(1), -1.0), (Some("a"), Some(1), 0.5),
+      (Some("a"), Some(1), 0.5), (None, None, 3.0), (Some("Z"), Some(3), 9.0),
+      (Some("é"), Some(0), 0.5), (Some("a"), Some(1), -0.5), (Some("ä"), None, 0.0))
+      .toDF("s", "i", "d").repartition(3)
+    assert(df.rdd.getNumPartitions == 3)
+    val got = graft.queries.ExtensionQueries.sorted(df).collect().toSeq
+    assert(got == orderByAll(df).collect().toSeq)
+  }
+
+  test("a sorted answer runs its plan once: no range-sampling job, no RangePartitioning") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.queries.ExtensionQueries.sorted
+    def answer = Tpch.table(spark, sfDir, "orders").groupBy("o_orderpriority")
+      .agg(count(lit(1)).as("n"), sum("o_totalprice").as("total"))
+    answer.schema // the reader's schema inference, outside the counted windows
+    val df = sorted(answer)
+    // the aggregate's shuffle stage, the one-partition shuffle stage and
+    // the result; the global sort adds the range partitioner's sampling job
+    val viaSorted = jobsDuring(df.collect(): Unit)
+    assert(viaSorted == 3, s"sorted answer ran $viaSorted jobs; expected 3")
+    val viaOrderBy = jobsDuring(orderByAll(answer).collect(): Unit)
+    assert(viaOrderBy == 4, s"global sort ran $viaOrderBy jobs; expected 4")
+    val ranges = runtimePlanNodes(df.queryExecution.executedPlan).collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    assert(ranges.isEmpty, s"sorted answer range-partitions:\n${plan(df)}")
+    // under count() the sort goes and the one-partition exchange stands in
+    // for the final aggregate's: no more jobs than the global sort
+    val counted = jobsDuring(sorted(answer).count(): Unit)
+    assert(counted == 3, s"count over a sorted answer ran $counted jobs; expected 3")
+    val countedOrderBy = jobsDuring(orderByAll(answer).count(): Unit)
+    assert(countedOrderBy == 3, s"count over the global sort ran $countedOrderBy jobs; expected 3")
+  }
+
+  test("input tables: the schema is inferred once per path and modification time") {
+    val dir = java.nio.file.Files.createTempDirectory("input_table").toString
+    spark.range(5).toDF("a").write.parquet(s"$dir/t.parquet")
+    val first = jobsDuring(Tpch.table(spark, dir, "t"): Unit)
+    assert(first == 1, s"first read ran $first jobs; expected the one inference job")
+    val second = jobsDuring(Tpch.table(spark, dir, "t"): Unit)
+    assert(second == 0, s"second read ran $second jobs; expected 0")
+    // a table rewritten under the same path is inferred again
+    spark.range(5).selectExpr("id AS a", "id * 2 AS b")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val rewritten = Tpch.table(spark, dir, "t")
+    assert(rewritten.columns.toSeq == Seq("a", "b"))
+    assert(rewritten.agg(sum("b")).head().getLong(0) == 20L)
+    val missing = intercept[IllegalArgumentException](Tpch.table(spark, dir, "absent"))
+    assert(missing.getMessage.contains(s"$dir/absent.parquet does not exist"))
+  }
+
+  test("readCentroids is one job: the writer's schema, ordered by cell on the driver") {
+    import graft.operators.Similarity
+    val dir = java.nio.file.Files.createTempDirectory("centroids").toString
+    val base = spark.range(0, 32).select(col("id").as("vec_id"),
+      transform(sequence(lit(1), lit(4)), i =>
+        sin(i * col("id")).cast("double")).as("embedding"))
+    Similarity.saveIvfIndex(base, dir, nlist = 4, kmeansIters = 1, replicate = 1)
+    var cents = Array.empty[Array[Double]]
+    val jobs = jobsDuring { cents = Similarity.readCentroids(spark, dir) }
+    assert(jobs == 1, s"readCentroids ran $jobs jobs; expected 1")
+    val expected = spark.read.parquet(s"$dir/centroids").orderBy("cell").collect()
+      .map(_.getSeq[Double](1))
+    assert(cents.map(_.toSeq).toSeq == expected.toSeq)
+  }
 }
