@@ -31,6 +31,25 @@ object BenchCompare {
     (flat ++ stats).filter(_._2 > 0)
   }
 
+  /** Why the record `json` cannot be the baseline of a run at (`sf`,
+    * `cpus`), if it cannot: a record taken at another scale or core
+    * count (or one that does not say which) times different inputs, so
+    * its min-to-min deltas mean nothing. */
+  def baselineMismatch(json: String, sf: String, cpus: Int): Option[String] = {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val j = JsonMethods.parse(json)
+    def field(name: String): Option[String] = j \ name match {
+      case JString(v) => Some(v)
+      case JInt(i)    => Some(i.toString)
+      case _          => None
+    }
+    Seq("sf" -> sf, "cpus" -> cpus.toString).collectFirst {
+      case (k, own) if !field(k).contains(own) =>
+        s"its $k is ${field(k).getOrElse("unrecorded")}, this run's is $own"
+    }
+  }
+
   /** The newest committed reps-10 record in `dir`
     * (`BENCH_REPS10_r<N>.json`, highest N) — the comparison baseline
     * when `SPARK_GRAFT_BENCH_PREV` doesn't name one explicitly. */
@@ -222,7 +241,8 @@ object Bench {
     // disables the comparator by name instead of falling back to some
     // other baseline, and an unparseable/empty record disables it instead
     // of emitting "0 regressions against <named baseline>" for a
-    // comparison that never happened
+    // comparison that never happened; a record taken at another sf or
+    // core count disables it too, by name
     val prevPath = sys.env.get("SPARK_GRAFT_BENCH_PREV") match {
       case Some(p) =>
         val path = java.nio.file.Paths.get(p)
@@ -237,14 +257,20 @@ object Bench {
     }
     val prevParsed: Option[(java.nio.file.Path, Map[String, Double])] =
       prevPath.flatMap { p =>
-        val m = scala.util.Try(BenchCompare.parsePrevMins(
-          new String(java.nio.file.Files.readAllBytes(p), "UTF-8")))
+        val text = scala.util.Try(
+          new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+        val m = text.map(BenchCompare.parsePrevMins)
           .getOrElse(Map.empty[String, Double])
-        if (m.nonEmpty) Some((p, m))
-        else {
+        if (m.isEmpty) {
           System.err.println(s"[bench] prev record $p is unparseable or " +
             "empty — cross-round comparator DISABLED for this run")
           None
+        } else BenchCompare.baselineMismatch(text.get, sfDir, cpus) match {
+          case Some(why) =>
+            System.err.println(s"[bench] prev record $p is not comparable " +
+              s"($why) — cross-round comparator DISABLED for this run")
+            None
+          case None => Some((p, m))
         }
       }
     val prevMins: Map[String, Double] = prevParsed.map(_._2)

@@ -37,19 +37,23 @@ object ScaleProbe {
     * number — group-ref replacement, token count and per-row cost
     * unchanged), so no n-gram is shared across replicas and pair-based
     * steps replicate linearly BY CONSTRUCTION; see the main() comment.
-    * Replica ids compose collision-proof as `doc_id * n + rep` (unique
-    * and replica-disjoint for ANY non-negative id range — a fixed
-    * additive stride would collide once ids reach the stride, silently
-    * breaking both the disjointness premise and packSequencesBinned's
-    * unique-id rank tie-breaker); negative ids fail by name. */
+    * Ids are [[replicas]]' `doc_id * n + rep`. */
   def replicateDocs(docs1: DataFrame, n: Int): DataFrame =
-    docs1.sparkSession.range(n).toDF("rep").crossJoin(docs1)
-      .select((when(col("doc_id") < 0, raise_error(
-          lit("replicateDocs: negative doc_id breaks the collision-proof " +
-            "id composition"))).otherwise(col("doc_id")) * lit(n.toLong) +
-          col("rep")).as("doc_id"),
-        regexp_replace(col("text"), lit("(\\S+)"),
-          concat(lit("$1_"), col("rep").cast("string"))).as("text"))
+    replicas(docs1, "doc_id", n).select(col("doc_id"),
+      regexp_replace(col("text"), lit("(\\S+)"),
+        concat(lit("$1_"), col("rep").cast("string"))).as("text"))
+
+  /** `df` crossed with `n` replicas (column `rep`, 0 until n), its
+    * `idCol` recomposed collision-proof as `id * n + rep`: unique and
+    * replica-disjoint for ANY non-negative id range — a fixed additive
+    * stride would collide once ids reach the stride, silently breaking
+    * both the disjointness premise and packSequencesBinned's unique-id
+    * rank tie-breaker. A negative id fails by name. */
+  private def replicas(df: DataFrame, idCol: String, n: Int): DataFrame =
+    df.sparkSession.range(n).toDF("rep").crossJoin(df)
+      .withColumn(idCol, when(col(idCol) < 0, raise_error(lit(
+          s"negative $idCol breaks the collision-proof id composition")))
+        .otherwise(col(idCol)) * lit(n.toLong) + col("rep"))
 
   def main(args: Array[String]): Unit = {
     val factor = if (args.length > 0) args(0).toInt else 8
@@ -82,16 +86,12 @@ object ScaleProbe {
     val embDim = emb1.select(size(col("embedding"))).head().getInt(0)
     require(factor < embDim,
       s"replication factor must be < embedding dim $embDim, got $factor")
-    // ids compose collision-proof as vec_id * n + rep (the replicateDocs
-    // rule): unique and replica-disjoint for ANY non-negative id range —
-    // the previous fixed additive stride collided once ids reached it,
-    // silently merging replicas and breaking the replica-0 query filters
+    // ids compose collision-proof as vec_id * n + rep ([[replicas]]) —
+    // a fixed additive stride would merge replicas and break the
+    // replica-0 query filters
     def embN(n: Int): DataFrame =
-      spark.range(n).toDF("rep").crossJoin(emb1)
-        .select((when(col("vec_id") < 0, raise_error(
-            lit("embN: negative vec_id breaks the collision-proof id " +
-              "composition"))).otherwise(col("vec_id")) * lit(n.toLong) +
-            col("rep")).as("vec_id"),
+      replicas(emb1, "vec_id", n)
+        .select(col("vec_id"),
           // rotate each replica's vector by `rep` positions: deterministic,
           // norm-preserving, and DISTINCT per replica (a single shared
           // transform like reverse() makes all replicas bit-identical to
@@ -277,7 +277,7 @@ object ScaleProbe {
         val root = s"/tmp/graft_probe_ivfsq_$tag"
         graft.operators.Similarity.saveIvfSqIndex(e, root, nlist = 32,
           kmeansIters = 2)
-        graft.operators.Similarity.ivfSqKnnStored(spark, root,
+        graft.operators.Similarity.quantizedKnnStored(spark, root,
           e.filter(rep0Query),
           k = 5, nprobe = 4).count()
       })
@@ -289,14 +289,9 @@ object ScaleProbe {
     // operator leaks a global sort or a range fan-out)
     val ev1 = graft.sources.Sources.readEvents(spark, sfDir)
       .select("event_id", "user_id", "event_type", "ts")
-    // same collision-proof multiplicative composition as embN/replicateDocs
     def evN(n: Int): DataFrame =
-      spark.range(n).toDF("rep").crossJoin(ev1)
-        .select((when(col("event_id") < 0, raise_error(
-            lit("evN: negative event_id breaks the collision-proof id " +
-              "composition"))).otherwise(col("event_id")) * lit(n.toLong) +
-            col("rep")).as("event_id"),
-          col("user_id"), col("event_type"), col("ts"))
+      replicas(ev1, "event_id", n)
+        .select("event_id", "user_id", "event_type", "ts")
 
     def eventsSuite(tag: String, ev: DataFrame): Map[String, Double] = Map(
       "asof" -> timed(s"$tag as-of join") {
@@ -320,11 +315,8 @@ object ScaleProbe {
       .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"),
         col("o_totalprice"))
     def ingestStep(tag: String, n: Int): Map[String, Double] = {
-      // same collision-proof multiplicative composition as embN/evN —
-      // the additive stride collides once orderkeys reach it (~sf 17)
-      val on = spark.range(n).toDF("rep").crossJoin(orders1)
-        .select((col("o_orderkey") * lit(n.toLong) + col("rep")).as("o_orderkey"),
-          col("o_orderdate"), col("o_orderpriority"), col("o_totalprice"))
+      val on = replicas(orders1, "o_orderkey", n)
+        .select("o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice")
         .withColumn("o_year", year(col("o_orderdate")))
         .withColumn("cents", round(col("o_totalprice") * 100).cast("long"))
         .withColumn("one", lit(1L))
@@ -373,10 +365,8 @@ object ScaleProbe {
     def navStep(tag: String, n: Int): Map[String, Double] = {
       import graft.operators.AggregateNavigator
       import graft.operators.AggregateNavigator.NavMeasure
-      // multiplicative replica ids — see ingestStep
-      val on = spark.range(n).toDF("rep").crossJoin(orders1)
-        .select((col("o_orderkey") * lit(n.toLong) + col("rep")).as("o_orderkey"),
-          col("o_orderdate"), col("o_orderpriority"), col("o_totalprice"))
+      val on = replicas(orders1, "o_orderkey", n)
+        .select("o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice")
         .withColumn("o_year", year(col("o_orderdate")))
         .withColumn("cents", round(col("o_totalprice") * 100).cast("long"))
       val root = s"/tmp/graft_probe_nav_$n"

@@ -620,20 +620,12 @@ object AggregateNavigator {
     true
   }
 
-  /** ONE manifest read returning the summary inventory and the measure
-    * specs together — the per-query fast path reads store metadata
-    * exactly once (loadSummaries + storedMeasures would read it twice). */
+  /** ONE manifest read returning the summary inventory written by
+    * [[buildSummaries]] and the measure specs the store was built with
+    * (refresh reuses them) — the per-query fast path reads store
+    * metadata exactly once. */
   def loadStore(spark: SparkSession, root: String)
   : (Seq[Summary], Seq[NavMeasure]) = parseStore(readMeta(spark, root))
-
-  /** Load the summary inventory written by [[buildSummaries]]. */
-  def loadSummaries(spark: SparkSession, root: String): Seq[Summary] =
-    loadStore(spark, root)._1
-
-  /** The measure specs the store was built with (refresh reuses them;
-    * callers can also use this instead of re-declaring the measures). */
-  def storedMeasures(spark: SparkSession, root: String): Seq[NavMeasure] =
-    loadStore(spark, root)._2
 
   /** Routing decision: the smallest stored summary whose grain is a
     * superset of the requested dims (ties broken by name for

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 import graft.functions.VectorExpressions.dotp
 
@@ -440,26 +442,32 @@ object Similarity {
       normalize(col(cVec)).as("cv") +: metaCols.map(col)): _*).persist()
     try {
       val cents = trainCentroids(cBuild, nlist, kmeansIters)
-      import spark.implicits._
-      // centroid and corpus writes are independent — overlap them
-      // (guide-§2.6). The stamp is written only AFTER Par.run returns,
-      // i.e. after BOTH writes succeeded: a centroids write failing
-      // behind a completed corpus write must not leave a stamped layout
-      // with missing/partial centroids on disk (this path has no lineage
-      // file to signal incompleteness — advisor note r17). Par.run does
-      // not cancel sibling legs on failure, so a failed leg still lets
-      // the other write complete — harmless precisely because the stamp
-      // gates here.
-      graft.util.Par.run(Seq(
-        () => cents.zipWithIndex.toSeq.map { case (c, id) => (id, c.toSeq) }
-          .toDF("cell", "centroid")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids"),
+      writeLayout(spark, path, cents,
         () => cBuild.withColumn("cell",
               explode(topCells(col("cv"), cents, math.max(replicate, 1))))
             .repartition(col("cell")) // one writer per cell: ~nlist files, not tasks x cells
-            .write.mode("overwrite").partitionBy("cell").parquet(s"$path/corpus")))
-      stampBuild(spark, path)
+            .write.mode("overwrite").partitionBy("cell").parquet(s"$path/corpus"))
     } finally cBuild.unpersist(): Unit
+  }
+
+  /** Write an IVF build's layout — the `path`/centroids table (read back
+    * by [[readCentroids]]) and the layout's own writes, overlapped
+    * (guide-§2.6) — then drop the [[stampBuild]] stamp. The stamp
+    * asserts a complete layout, so it is written only AFTER Par.run
+    * returns, i.e. after EVERY write succeeded: a centroids write
+    * failing behind a completed corpus write must not leave a stamped
+    * layout with missing or partial centroids on disk. Par.run does not
+    * cancel sibling legs on failure, so a failed leg still lets the
+    * others complete — harmless precisely because the stamp gates
+    * here. */
+  private def writeLayout(spark: SparkSession, path: String,
+                          cents: Array[Array[Double]],
+                          writes: (() => Unit)*): Unit = {
+    import spark.implicits._
+    graft.util.Par.run((() => cents.zipWithIndex.toSeq
+      .map { case (c, id) => (id, c.toSeq) }.toDF("cell", "centroid")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")) +: writes)
+    stampBuild(spark, path)
   }
 
   /** Validated centroid read of a [[saveIvfIndex]] layout — fails fast
@@ -527,8 +535,8 @@ object Similarity {
       explode(topCells(col("qv"), cents, math.min(nprobe, cents.length))))
     val storedAll = readIvfCorpus(spark, path)
     require(storedAll.columns.contains("cv"),
-      s"$path/corpus lacks raw vectors — a compressed saveIvfPqIndex " +
-        "layout? (use ivfPqKnnStored for that)")
+      s"$path/corpus lacks raw vectors — a compressed PQ or SQ8 " +
+        "layout? (use quantizedKnnStored for that)")
     val stored = where.map(storedAll.filter).getOrElse(storedAll)
     rankTopK(
       stored.join(broadcast(probed), "cell")
@@ -687,6 +695,9 @@ object Similarity {
   def indexHealth(spark: org.apache.spark.sql.SparkSession,
                   path: String): DataFrame = {
     import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+    // the footer census runs on the shared bounded pool of the
+    // streaming store health census
+    import graft.util.ParquetMeta.{CensusThreads, mapBounded}
     val conf = spark.sessionState.newHadoopConf()
     val cents = readCentroids(spark, path)
     val nlist = cents.length
@@ -746,7 +757,7 @@ object Similarity {
     // independent metadata fetches (latency-bound on object stores), so
     // a 10⁵-file store reports in seconds instead of minutes; result
     // order matches `files` (futures resolved in submit order)
-    val perFile = mapBounded(files, FooterCensusThreads) { st =>
+    val perFile = mapBounded(files, CensusThreads) { st =>
       (cellOf(st), footerRows(st),
         isAppended(st, relName(fs, corpusDir, st)))
     }
@@ -765,7 +776,7 @@ object Similarity {
     val appendsDir = new HPath(s"$path/appends")
     val appendedStream =
       if (fs.exists(appendsDir))
-        mapBounded(parquetFiles(appendsDir), FooterCensusThreads)(footerRows).sum
+        mapBounded(parquetFiles(appendsDir), CensusThreads)(footerRows).sum
       else 0L
     val appended = appendedInPlace + appendedStream
     val all = total + appendedStream
@@ -773,7 +784,7 @@ object Similarity {
       if (all == 0) 0.0 else appended.toDouble / all
     val median = pct(0.5)
     val hottest = if (cellCounts.isEmpty) 0L else cellCounts.last
-    val layout = detectLayout(spark, path)
+    val layout = storedLayout(spark, path).fold("ivf-flat")(_.name)
     val reasons = Seq(
       if (appendedFrac >= 0.5)
         Some(f"appended fraction $appendedFrac%.2f >= 0.5 — appended " +
@@ -796,17 +807,6 @@ object Similarity {
         "rows_total", "rows_base", "rows_appended", "appended_frac",
         "cell_rows_min", "cell_rows_median", "cell_rows_p99",
         "cell_rows_max", "recommend_rebuild", "reason")
-  }
-
-  /** Stored-layout kind: `ivf-flat`, `ivf-sq8`, or `ivf-pq` — the same
-    * marker-dir rule every stored-index consumer uses. */
-  private def detectLayout(spark: org.apache.spark.sql.SparkSession,
-                           path: String): String = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/sq"))) "ivf-sq8"
-    else if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/pq"))) "ivf-pq"
-    else "ivf-flat"
   }
 
   /** LAYOUT-AWARE offline rebuild of any stored index at `newPath`
@@ -842,7 +842,8 @@ object Similarity {
                          sVec: String = "embedding"): String = {
     require(newPath != path,
       "rebuild writes a fresh layout — newPath must differ from path")
-    val layout = detectLayout(spark, path)
+    val layout = storedLayout(spark, path)
+    val name = layout.fold("ivf-flat")(_.name)
     val nl = if (nlist > 0) nlist else readCentroids(spark, path).length
     // ORIGINAL vectors for a lossy-layout retrain: the caller's explicit
     // `source` wins; otherwise the store's recorded lineage
@@ -863,7 +864,7 @@ object Similarity {
               "re-encoded)")
           (spark.read.parquet(srcPath), lid, lvec, Some(srcPath))
         case None => throw new IllegalArgumentException(
-          s"rebuildStoredIndex: $path is $layout — its codes are lossy, " +
+          s"rebuildStoredIndex: $path is $name — its codes are lossy, " +
             "so a rebuild needs the ORIGINAL vectors; pass source = the " +
             "embedding corpus (re-encoding reconstructions would " +
             "compound quantization error into the new grid), or save " +
@@ -872,26 +873,25 @@ object Similarity {
       }
     }
     layout match {
-      case "ivf-flat" => source match {
+      case None => source match {
         case Some(src) =>
           saveIvfIndex(src, newPath, nl, kmeansIters, replicate, sId, sVec)
         case None =>
           rebuildIvfIndex(spark, path, newPath, nl, kmeansIters, replicate)
       }
-      case "ivf-sq8" =>
+      case Some(SqLayout) =>
         val (src, id, vec, fwd) = need
         saveIvfSqIndex(src, newPath, nl, kmeansIters, replicate, id, vec,
           sourcePath = fwd): Unit
-      case "ivf-pq" =>
-        // preserve the stored code geometry: m sub-blocks, ksub centroids
-        val pq = spark.read.parquet(s"$path/pq")
-          .agg(max("blk"), max("cid")).head()
+      case Some(_) =>
+        // ivf-pq: preserve the stored code geometry (m sub-blocks, ksub
+        // centroids)
+        val pq = PqLayout.read(spark, path).model
         val (src, id, vec, fwd) = need
-        saveIvfPqIndex(src, newPath, nl, pq.getInt(0) + 1,
-          pq.getInt(1) + 1, kmeansIters, 3, replicate, id, vec,
-          sourcePath = fwd): Unit
+        saveIvfPqIndex(src, newPath, nl, pq.m, pq.ksub, kmeansIters, 3,
+          replicate, id, vec, sourcePath = fwd): Unit
     }
-    layout
+    name
   }
 
   /** MAINTENANCE entry point wiring [[indexHealth]] to a conditional
@@ -1157,25 +1157,6 @@ object Similarity {
     topkRanks(scored, k)
   }
 
-  /** Build and PERSIST the compressed serving layout — IVF cells × PQ
-    * codes: coarse centroids prune the scan to `nprobe/nlist` of the
-    * index as whole hive partitions (the [[ivfKnnStored]] DPP shape) and
-    * the cells store m-int PQ codes INSTEAD of raw vectors, so the index
-    * on disk (and per-probe scan bytes) shrinks ~dim·4/m×. This is the
-    * standard web-scale ANN serving stack (IVF-PQ): at 100 TB of raw
-    * embeddings the flat index is already unscannable and the
-    * uncompressed IVF cells still carry full vectors — here a probed
-    * partition reads 16-byte codes. Codes quantize the RESIDUAL
-    * v − centroid(cell) (each replicated copy against its own cell), so
-    * the codebook budget covers the within-cell scatter instead of the
-    * whole sphere — the standard accuracy-per-byte move; the probe
-    * reconstructs distances from per-(query, cell) residual tables
-    * ([[ivfPqKnnStored]]).
-    *
-    * Layout: `path`/centroids (IVF), `path`/pq (codebooks),
-    * `path`/corpus (neighbor_id, pq_code) partitioned by cell.
-    * @return the trained [[PqModel]] (also persisted — [[ivfPqKnnStored]]
-    *         reloads it from the layout) */
   /** RESIDUAL cell assignment, the scaffolding every IVF-compressed
     * layout shares (build AND append, PQ and SQ8): each prepared
     * ("neighbor_id", "cv") row joins its `replicate` nearest cells and
@@ -1196,30 +1177,6 @@ object Similarity {
       .withColumn("res", zip_with(col("cv"),
         element_at(centLit, col("cell") + 1), (a, b) => a - b))
   }
-
-  /** Shared cell-partitioned code write: one writer per cell (~nlist
-    * files, not tasks × cells). An "overwrite" (= index build) finishes
-    * by dropping the [[stampBuild]] marker so [[indexHealth]] can
-    * attribute later in-place appends. */
-  private def writeCellCodes(assigned: DataFrame, codes: Column,
-                             codeName: String, path: String,
-                             saveMode: String): Unit = {
-    assigned.select(col("neighbor_id"), codes.as(codeName), col("cell"))
-      .repartition(col("cell"))
-      .write.mode(saveMode).partitionBy("cell").parquet(s"$path/corpus")
-    if (saveMode == "overwrite") stampBuild(assigned.sparkSession, path)
-  }
-
-  /** Parallelism for the [[indexHealth]] footer census: independent
-    * metadata reads, latency-bound on object stores
-    * ([[graft.util.ParquetMeta]] is the shared machinery). */
-  private val FooterCensusThreads: Int = graft.util.ParquetMeta.CensusThreads
-
-  /** See [[graft.util.ParquetMeta.mapBounded]] — shared with the
-    * streaming store health census. */
-  private def mapBounded[A, B](items: Seq[A], parallelism: Int)
-                              (f: A => B): Seq[B] =
-    graft.util.ParquetMeta.mapBounded(items, parallelism)(f)
 
   /** A file's path relative to `root`, scheme/authority-independent
     * (both sides via URI path), for the [[stampBuild]] manifest. */
@@ -1303,154 +1260,6 @@ object Similarity {
     }
   }
 
-  def saveIvfPqIndex(corpus: DataFrame, path: String, nlist: Int = 16,
-                     m: Int = 8, ksub: Int = 16, kmeansIters: Int = 3,
-                     pqIters: Int = 3, replicate: Int = 2,
-                     cId: String = "vec_id", cVec: String = "embedding",
-                     sourcePath: Option[String] = None)
-  : PqModel = {
-    val spark = corpus.sparkSession
-    val cBuild = corpus.select(col(cId).as("neighbor_id"),
-      normalize(col(cVec)).as("cv")).persist()
-    try {
-      val cents = trainCentroids(cBuild, nlist, kmeansIters)
-      val assigned = assignResiduals(cBuild, cents, replicate).persist()
-      try {
-        val model = trainPqOn(
-          assigned.select(col("neighbor_id").as("__id"), col("res").as("cv")),
-          m, ksub, pqIters)
-        import spark.implicits._
-        // the three layout writes are independent (tiny centroid/codebook
-        // tables + the partitioned code write, which ends with its own
-        // stamp) — overlap them (guide-§2.6); lineage stays LAST, after
-        // the full layout lands (the half-built-index contract)
-        graft.util.Par.run(Seq(
-          () => cents.zipWithIndex.toSeq.map { case (c, id) => (id, c.toSeq) }
-            .toDF("cell", "centroid")
-            .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids"),
-          () => (for (s <- 0 until m; c <- 0 until ksub)
-            yield (s, c, model.codebooks(s)(c).toSeq))
-            .toDF("blk", "cid", "centroid")
-            .coalesce(1).write.mode("overwrite").parquet(s"$path/pq"),
-          () => writeCellCodes(assigned, model.encodeExpr(col("res")),
-            "pq_code", path, "overwrite")))
-        writeLineage(spark, path, sourcePath, cId, cVec)
-        model
-      } finally assigned.unpersist(): Unit
-    } finally cBuild.unpersist(): Unit
-  }
-
-  private def readPqModel(spark: org.apache.spark.sql.SparkSession,
-                          path: String): PqModel = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/pq")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(dir),
-      s"$path/pq does not exist — not a saveIvfPqIndex layout")
-    val rows = spark.read.parquet(s"$path/pq").collect()
-      .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray)
-      .toMap
-    require(rows.nonEmpty, s"$path/pq is empty — not a saveIvfPqIndex layout")
-    val m = rows.keys.map(_._1).max + 1
-    val ksub = rows.keys.map(_._2).max + 1
-    val dsub = rows.head._2.length
-    PqModel(m * dsub, m, ksub,
-      Array.tabulate(m)(s => Array.tabulate(ksub)(c => rows((s, c)))))
-  }
-
-  /** Append new vectors to a stored [[saveIvfPqIndex]] layout at delta
-    * cost: assign to the EXISTING centroids, residual-encode with the
-    * EXISTING codebooks, append the codes into the cell partitions —
-    * the index is never read or rewritten. Same drift contract as
-    * [[appendToIvfIndex]]: frozen centroids/codebooks fit a shifted
-    * distribution increasingly poorly, so once appended volume rivals
-    * the corpus, rebuild offline ([[saveIvfPqIndex]] at a NEW path,
-    * never in place). */
-  def appendToIvfPqIndex(delta: DataFrame, path: String,
-                         replicate: Int = 2, cId: String = "vec_id",
-                         cVec: String = "embedding"): Unit = {
-    val spark = delta.sparkSession
-    val cents = readCentroids(spark, path)
-    val model = readPqModel(spark, path)
-    val assigned = assignResiduals(
-      delta.select(col(cId).as("neighbor_id"), normalize(col(cVec)).as("cv")),
-      cents, replicate)
-    writeCellCodes(assigned, model.encodeExpr(col("res")), "pq_code",
-      path, "append")
-  }
-
-  /** Approximate top-k against a stored [[saveIvfPqIndex]]: queries
-    * probe their `nprobe` nearest cells (whole-partition pruning at the
-    * scan, as [[ivfKnnStored]]) and score the probed cells' CODES by
-    * asymmetric distance — per query one m×ksub table on the broadcast
-    * side, m native `element_at` lookups per candidate row. Replicated
-    * cell copies dedupe before ranking; ranking is the shared bounded
-    * top-k. Output: (query_id, neighbor_id, rank). */
-  def ivfPqKnnStored(spark: org.apache.spark.sql.SparkSession, path: String,
-                     queries: DataFrame, k: Int, nprobe: Int = 4,
-                     qId: String = "vec_id", qVec: String = "embedding")
-  : DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    val cents = readCentroids(spark, path)
-    val model = readPqModel(spark, path)
-    // per (query, probed cell): the query RESIDUAL against that cell's
-    // centroid (codes quantize residuals — see saveIvfPqIndex), its
-    // squared norm, and the m ADC tables over it. All on the small
-    // broadcast side; per-candidate work stays m element_at lookups.
-    //   ||q − v||² ≈ ||qres − r_code||²
-    //             = |qres|² + Σ_s (|r_s|² − 2·qres_s·r_s)
-    val centLit = typedLit(cents.map(_.toSeq).toSeq)
-    val qres = zip_with(col("qv"),
-      element_at(centLit, col("cell") + 1), (a, b) => a - b)
-    // ONE kernel-built m × ksub table per (query, probed cell) row on the
-    // broadcast side (graft.functions.AdcDistanceTables) — the previous m
-    // dtab columns of ksub unrolled dot products, fused into the probe
-    // explode, were a 64 KB janino overflow site
-    val probed = queries
-      .select(col(qId).as("query_id"), normalize(col(qVec)).as("qv"))
-      .withColumn("cell",
-        explode(topCells(col("qv"), cents, math.min(nprobe, cents.length))))
-      .withColumn("qres", qres)
-      .select(col("query_id"), col("cell"),
-        dotp(col("qres"), col("qres")).as("qres2"),
-        graft.functions.AnnExpressions.adcTables(col("qres"), model.codebooks)
-          .as("dtab"))
-    val stored = readIvfCorpus(spark, path)
-    require(stored.columns.contains("pq_code"),
-      s"$path/corpus lacks pq_code — a flat saveIvfIndex layout? " +
-        "(use ivfKnnStored for that)")
-    // STATIC partition pruning: queries are a request (small by
-    // contract), so the probed cell set is collected and pushed into the
-    // scan as a literal IN — guaranteed whole-partition pruning,
-    // independent of the dynamic-pruning heuristics (which decline
-    // local-relation build sides). The probe frame is MATERIALIZED
-    // first (eager, |Q|·nprobe rows) so the collected cell set and the
-    // joined probe rows come from ONE evaluation — a nondeterministic
-    // query lineage (sample/limit over multiple files) re-executed in
-    // the join could otherwise carry cells the literal filter excluded,
-    // silently dropping candidates.
-    val probedM = probed.transform(graft.util.Stage.materialize)
-    val probedCells = probedM.select("cell").distinct().collect()
-      .map(_.getInt(0)).toSeq
-    // self-enforcing bound on the driver-side literal: the collected set
-    // is CELLS, not queries — capped by nlist regardless of how many
-    // query rows the caller passes (a violation means a corrupt layout)
-    require(probedCells.size <= cents.length,
-      s"probed cell set (${probedCells.size}) exceeds nlist " +
-        s"(${cents.length}) — corrupt index layout at $path?")
-    val dist = col("qres2") +
-      graft.functions.AnnExpressions.adcSum(col("dtab"), col("pq_code"))
-    val scored = stored.filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(probedM), "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), (-dist).as("score"))
-      // a replicated neighbor reached via two cells carries two residual
-      // approximations — keep the better (smaller-distance) one; a plain
-      // distinct would let one neighbor occupy two top-k slots
-      .groupBy("query_id", "neighbor_id")
-      .agg(max("score").as("score"))
-    topkRanks(scored, k)
-  }
-
   /** Bounded top-k tail shared by the stored compressed probes: long-id
     * heap over (query_id, neighbor_id, score) → (query_id, neighbor_id,
     * rank) — map-side partial combine, the shuffle carries ≤ k rows per
@@ -1471,10 +1280,10 @@ object Similarity {
         (col("idx") + 1).as("rank"))
   }
 
-  /** Exact re-rank of a nominated (query_id, neighbor_id) set against
+  /** Exact re-rank of a nominated (query_id, neighbor_id, ...) set against
     * the raw vector table — the FAISS refine tail every compressed
-    * nomination path shares ([[ivfPqKnnRefined]], [[sqKnnRefined]],
-    * [[rpKnnRefined]], [[ivfSqKnnRefined]]): the candidate set is
+    * nomination path shares ([[quantizedKnnRefined]], [[sqKnnRefined]],
+    * [[rpKnnRefined]]): the candidate set is
     * request-bounded (|Q|·k·refine rows), so it broadcasts into a
     * semi-join that prunes the raw scan; per-candidate work is one
     * exact dot; ranking is the shared bounded top-k. */
@@ -1485,38 +1294,10 @@ object Similarity {
     val q = queries.select(col(qId).as("query_id"), normalize(col(qVec)).as("qv"))
     val scored = corpus
       .select(col(cId).as("neighbor_id"), normalize(col(cVec)).as("cv"))
-      .join(broadcast(cand), "neighbor_id")
+      .join(broadcast(cand.select("query_id", "neighbor_id")), "neighbor_id")
       .join(broadcast(q), "query_id")
       .withColumn("cos", dotp(col("qv"), col("cv")))
     rankTopK(scored, k, corpus.schema(cId).dataType)
-  }
-
-  /** IVF-PQ serving with EXACT re-ranking (the FAISS refine pattern):
-    * the compressed index nominates `k × refine` candidates per query by
-    * ADC distance, then ONLY those candidates are re-scored with exact
-    * cosine against the raw vector table and the true top `k` returned.
-    * This recovers almost all of the recall the residual quantization
-    * loses while still reading the raw vectors of a candidate-pruned
-    * sliver of the corpus — the standard accuracy/IO trade for a
-    * compressed 100 TB index whose raw vectors stay in parquet.
-    *
-    * `corpus` must be the id-aligned raw vector table the index was
-    * built from. Scale shape: the candidate set is queries × (k·refine)
-    * rows (request-bounded, like the q92 probe set) and broadcasts into
-    * a semi-join that prunes the raw-vector scan; per-candidate work is
-    * one exact dot; ranking is the shared bounded top-k heap. */
-  def ivfPqKnnRefined(spark: org.apache.spark.sql.SparkSession, path: String,
-                      queries: DataFrame, corpus: DataFrame, k: Int,
-                      refine: Int = 4, nprobe: Int = 4,
-                      qId: String = "vec_id", qVec: String = "embedding",
-                      cId: String = "vec_id", cVec: String = "embedding")
-  : DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    val cand = ivfPqKnnStored(spark, path, queries, k = k * refine, nprobe,
-        qId, qVec)
-      .select("query_id", "neighbor_id")
-    refineExact(cand, queries, corpus, k, qId, qVec, cId, cVec)
   }
 
   // -------------------------------------------------------------------
@@ -1629,7 +1410,7 @@ object Similarity {
   }
 
   /** SQ8 nomination + exact re-rank (the FAISS refine pattern, as
-    * [[ivfPqKnnRefined]]): the compressed scan nominates k·refine
+    * [[quantizedKnnRefined]]): the compressed scan nominates k·refine
     * candidates, raw vectors re-score only those. The raw corpus is
     * touched for |Q|·k·refine rows, not scanned. */
   def sqKnnRefined(queries: DataFrame, codes: DataFrame, model: SqModel,
@@ -1641,25 +1422,149 @@ object Similarity {
     require(k > 0, s"k must be positive, got $k")
     require(refine >= 1, s"refine must be >= 1, got $refine")
     val cand = sqKnn(queries, codes, model, k * refine, qId, qVec, cId,
-        codesCol, excludeSelf)
-      .select("query_id", "neighbor_id")
+      codesCol, excludeSelf)
     refineExact(cand, queries, corpus, k, qId, qVec, cId, cVec)
   }
 
-  /** Build and PERSIST the IVF-SQ8 serving layout (FAISS
-    * `IndexIVFScalarQuantizer`): coarse centroids prune the probe to
-    * whole hive partitions (the [[ivfKnnStored]] shape) and cells store
-    * int8 codes of the RESIDUAL v − centroid(cell) — the residual's
-    * spread is the within-cell scatter, so the same 8 bits/dim
-    * reconstruct far tighter than a raw-sphere grid (the [[saveIvfPqIndex]]
-    * move with a training-free quantizer). On disk: centroids +
-    * per-dim (min, span) grid + cell-partitioned code parquet; raw
-    * vectors are NOT stored. */
-  def saveIvfSqIndex(corpus: DataFrame, path: String, nlist: Int = 16,
-                     kmeansIters: Int = 3, replicate: Int = 2,
-                     cId: String = "vec_id", cVec: String = "embedding",
-                     sourcePath: Option[String] = None)
-  : SqModel = {
+  // -------------------------------------------------------------------
+  // RESIDUAL-CODE STORED LAYOUTS — IVF-PQ and IVF-SQ8. Both store, per
+  // IVF cell, a code of the RESIDUAL v − centroid(cell) instead of the
+  // raw vector (each replicated copy against its own cell — the
+  // residual's spread is the within-cell scatter, so the same code
+  // budget reconstructs far tighter than a whole-sphere code). A codec
+  // holds what differs between the two: training, the model table, the
+  // residual encoding, and the per-(query, cell) probe columns with the
+  // score they feed. The build, the append, the probe and the refine
+  // are written once around it.
+  // -------------------------------------------------------------------
+
+  /** A trained residual quantizer. */
+  private sealed trait ResidualCodec {
+    def layout: ResidualLayout[ResidualCodec]
+    /** The stored code of a residual column. */
+    def encode(res: Column): Column
+    /** The model table's rows. */
+    def modelRows: Seq[Row]
+    /** Per (query, probed cell) columns from `query_id`, `qv` and `cell`;
+      * `cent` is the probed cell's centroid. */
+    def probe(probed: DataFrame, cent: Column): DataFrame
+    /** A candidate's score (larger is nearer) over the probe columns and
+      * its stored code. */
+    def score: Column
+  }
+
+  /** A residual-code layout kind: its [[indexHealth]] name, its model
+    * dir (which is also its marker, see [[storedLayout]]), its code
+    * column; its model table is written and read with one schema. */
+  private final class ResidualLayout[+C <: ResidualCodec](val name: String,
+      val dir: String, val codeCol: String, schema: String)
+      (decode: Array[Row] => C) {
+    def write(spark: SparkSession, rows: Seq[Row], path: String): Unit =
+      spark.createDataFrame(rows.asJava, StructType.fromDDL(schema))
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/$dir")
+    def read(spark: SparkSession, path: String): C = {
+      val rows = spark.read.schema(schema).parquet(s"$path/$dir").collect()
+      require(rows.nonEmpty, s"$path/$dir is empty — not a complete $name layout")
+      decode(rows)
+    }
+  }
+
+  private val PqLayout = new ResidualLayout("ivf-pq", "pq", "pq_code",
+      "blk INT, cid INT, centroid ARRAY<DOUBLE>")({ rows =>
+    val books = rows
+      .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray).toMap
+    val m = books.keys.map(_._1).max + 1
+    val ksub = books.keys.map(_._2).max + 1
+    PqCodec(PqModel(m * books.head._2.length, m, ksub,
+      Array.tabulate(m)(s => Array.tabulate(ksub)(c => books((s, c))))))
+  })
+
+  private val SqLayout = new ResidualLayout("ivf-sq8", "sq", "sq_code",
+      "i INT, mn DOUBLE, span DOUBLE")({ rows =>
+    val grid = rows.map(r => r.getInt(0) -> ((r.getDouble(1), r.getDouble(2))))
+      .toMap
+    SqCodec(SqModel(Array.tabulate(grid.size)(i => grid(i)._1),
+      Array.tabulate(grid.size)(i => grid(i)._2)))
+  })
+
+  /** PQ codes; the probe scores by asymmetric distance over the query
+    * RESIDUAL against each probed cell's centroid:
+    *   ||q − v||² ≈ ||qres − r_code||²
+    *             = |qres|² + Σ_s (|r_s|² − 2·qres_s·r_s)
+    * One kernel-built m × ksub table per probe row on the broadcast side
+    * ([[graft.functions.AdcDistanceTables]] — m unrolled dtab columns
+    * were a 64 KB janino overflow site); per candidate, m `element_at`
+    * lookups. */
+  private final case class PqCodec(model: PqModel) extends ResidualCodec {
+    def layout: ResidualLayout[ResidualCodec] = PqLayout
+    def encode(res: Column): Column = model.encodeExpr(res)
+    def modelRows: Seq[Row] = for (s <- 0 until model.m; c <- 0 until model.ksub)
+      yield Row(s, c, model.codebooks(s)(c).toSeq)
+    def probe(probed: DataFrame, cent: Column): DataFrame =
+      probed.withColumn("qres", zip_with(col("qv"), cent, (a, b) => a - b))
+        .select(col("query_id"), col("cell"),
+          dotp(col("qres"), col("qres")).as("qres2"),
+          graft.functions.AnnExpressions.adcTables(col("qres"), model.codebooks)
+            .as("dtab"))
+    def score: Column = -(col("qres2") +
+      graft.functions.AnnExpressions.adcSum(col("dtab"), col("pq_code")))
+  }
+
+  /** SQ8 codes; scoring DECOMPOSES the reconstruction dot so each
+    * candidate costs ONE codegen'd dotp over its codes, never a
+    * per-candidate zip_with:
+    *   q·v̂ = q·(centroid + mn + c⊙span/255)
+    *       = [q·centroid + q·mn]  (per (query, cell), broadcast side)
+    *       + (q⊙span/255)·c      (dotp against the candidate's codes)
+    * It ranks by inner product of the reconstruction; the refine gives
+    * exact cosine. */
+  private final case class SqCodec(model: SqModel) extends ResidualCodec {
+    def layout: ResidualLayout[ResidualCodec] = SqLayout
+    def encode(res: Column): Column = sqCodes(res, model)
+    def modelRows: Seq[Row] =
+      model.mins.indices.map(i => Row(i, model.mins(i), model.spans(i)))
+    def probe(probed: DataFrame, cent: Column): DataFrame =
+      probed.select(col("query_id"), col("cell"),
+        (dotp(col("qv"), cent) + dotp(col("qv"), lit(model.mins))).as("base"),
+        zip_with(col("qv"), lit(model.spans.map(_ / 255.0)), (q, w) => q * w)
+          .as("wq"))
+    def score: Column =
+      col("base") + dotp(col("sq_code").cast("array<double>"), col("wq"))
+  }
+
+  /** The residual-code layout stored at `path`, by its marker dir (`sq`
+    * before `pq`); None for a flat [[saveIvfIndex]] layout. */
+  private def storedLayout(spark: SparkSession,
+                           path: String): Option[ResidualLayout[ResidualCodec]] = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    Seq(SqLayout, PqLayout)
+      .find(l => fs.exists(new org.apache.hadoop.fs.Path(s"$path/${l.dir}")))
+  }
+
+  private def readCodec(spark: SparkSession, path: String): ResidualCodec =
+    storedLayout(spark, path).map(_.read(spark, path)).getOrElse(
+      throw new IllegalArgumentException(s"$path has no pq or sq model — " +
+        "not a saveIvfPqIndex / saveIvfSqIndex layout (serve a flat " +
+        "saveIvfIndex layout with ivfKnnStored)"))
+
+  /** Cell-partitioned code write: one writer per cell (~nlist files, not
+    * tasks × cells). */
+  private def writeCodes(assigned: DataFrame, codec: ResidualCodec,
+                         path: String, mode: String): Unit =
+    assigned.select(col("neighbor_id"),
+        codec.encode(col("res")).as(codec.layout.codeCol), col("cell"))
+      .repartition(col("cell"))
+      .write.mode(mode).partitionBy("cell").parquet(s"$path/corpus")
+
+  /** The one residual-code build: persist the normalized corpus, train
+    * the centroids, assign every vector's residuals, train the codec on
+    * them, then write centroids, model table and codes through
+    * [[writeLayout]] (stamp after every write) and the lineage last. */
+  private def saveResidualIndex[C <: ResidualCodec](corpus: DataFrame,
+      path: String, nlist: Int, kmeansIters: Int, replicate: Int,
+      cId: String, cVec: String, sourcePath: Option[String])
+      (train: DataFrame => C): C = {
     val spark = corpus.sparkSession
     val cBuild = corpus.select(col(cId).as("neighbor_id"),
       normalize(col(cVec)).as("cv")).persist()
@@ -1667,125 +1572,139 @@ object Similarity {
       val cents = trainCentroids(cBuild, nlist, kmeansIters)
       val assigned = assignResiduals(cBuild, cents, replicate).persist()
       try {
-        val model = trainSq(assigned.select(col("res")), "res")
-        import spark.implicits._
-        // independent layout writes overlapped; lineage last (see
-        // saveIvfPqIndex)
-        graft.util.Par.run(Seq(
-          () => cents.zipWithIndex.toSeq.map { case (c, id) => (id, c.toSeq) }
-            .toDF("cell", "centroid")
-            .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids"),
-          () => model.mins.indices.map(i =>
-            (i, model.mins(i), model.spans(i))).toSeq
-            .toDF("i", "mn", "span")
-            .coalesce(1).write.mode("overwrite").parquet(s"$path/sq"),
-          () => writeCellCodes(assigned, sqCodes(col("res"), model),
-            "sq_code", path, "overwrite")))
+        val codec = train(assigned)
+        writeLayout(spark, path, cents,
+          () => codec.layout.write(spark, codec.modelRows, path),
+          () => writeCodes(assigned, codec, path, "overwrite"))
         writeLineage(spark, path, sourcePath, cId, cVec)
-        model
+        codec
       } finally assigned.unpersist(): Unit
     } finally cBuild.unpersist(): Unit
   }
 
-  /** Append new vectors to a stored [[saveIvfSqIndex]] at delta cost:
-    * assign to the EXISTING centroids, residual-encode on the EXISTING
-    * grid, append into the cell partitions — the index is never read or
-    * rewritten. Same drift contract as [[appendToIvfPqIndex]]: once
-    * appended volume rivals the corpus, rebuild offline at a NEW path. */
-  def appendToIvfSqIndex(delta: DataFrame, path: String,
-                         replicate: Int = 2, cId: String = "vec_id",
-                         cVec: String = "embedding"): Unit = {
+  /** Build and PERSIST the compressed serving layout — IVF cells × PQ
+    * codes (the web-scale IVF-PQ stack): coarse centroids prune the scan
+    * to `nprobe/nlist` of the index as whole hive partitions, and the
+    * cells store m-int PQ codes of the residual INSTEAD of raw vectors,
+    * so the index on disk (and per-probe scan bytes) shrinks ~dim·4/m×.
+    * Layout: `path`/centroids, `path`/pq (codebooks), `path`/corpus
+    * (neighbor_id, pq_code) partitioned by cell. Serve it with
+    * [[quantizedKnnStored]].
+    * @return the trained [[PqModel]] (also persisted) */
+  def saveIvfPqIndex(corpus: DataFrame, path: String, nlist: Int = 16,
+                     m: Int = 8, ksub: Int = 16, kmeansIters: Int = 3,
+                     pqIters: Int = 3, replicate: Int = 2,
+                     cId: String = "vec_id", cVec: String = "embedding",
+                     sourcePath: Option[String] = None)
+  : PqModel =
+    saveResidualIndex(corpus, path, nlist, kmeansIters, replicate, cId,
+      cVec, sourcePath)(a => PqCodec(trainPqOn(
+        a.select(col("neighbor_id").as("__id"), col("res").as("cv")),
+        m, ksub, pqIters))).model
+
+  /** Build and PERSIST the IVF-SQ8 serving layout (FAISS
+    * `IndexIVFScalarQuantizer`): coarse cells prune the probe as whole
+    * hive partitions and store int8 codes of the residual on a
+    * training-free per-dim grid. On disk: centroids + per-dim (min,
+    * span) grid (`path`/sq) + cell-partitioned code parquet; raw vectors
+    * are NOT stored. Serve it with [[quantizedKnnStored]]. */
+  def saveIvfSqIndex(corpus: DataFrame, path: String, nlist: Int = 16,
+                     kmeansIters: Int = 3, replicate: Int = 2,
+                     cId: String = "vec_id", cVec: String = "embedding",
+                     sourcePath: Option[String] = None)
+  : SqModel =
+    saveResidualIndex(corpus, path, nlist, kmeansIters, replicate, cId,
+      cVec, sourcePath)(a => SqCodec(trainSq(a.select(col("res")), "res")))
+      .model
+
+  /** Append new vectors to a stored PQ or SQ8 layout at delta cost:
+    * assign to the EXISTING centroids, residual-encode with the EXISTING
+    * model, append the codes into the cell partitions — the index is
+    * never read or rewritten. Same drift contract as
+    * [[appendToIvfIndex]]: once appended volume rivals the corpus,
+    * rebuild offline at a NEW path ([[rebuildStoredIndex]]). */
+  def appendToQuantizedIndex(delta: DataFrame, path: String,
+                             replicate: Int = 2, cId: String = "vec_id",
+                             cVec: String = "embedding"): Unit = {
     val spark = delta.sparkSession
-    val cents = readCentroids(spark, path)
-    val model = readSqModel(spark, path)
     val assigned = assignResiduals(
       delta.select(col(cId).as("neighbor_id"), normalize(col(cVec)).as("cv")),
-      cents, replicate)
-    writeCellCodes(assigned, sqCodes(col("res"), model), "sq_code",
-      path, "append")
+      readCentroids(spark, path), replicate)
+    writeCodes(assigned, readCodec(spark, path), path, "append")
   }
 
-  private def readSqModel(spark: org.apache.spark.sql.SparkSession,
-                          path: String): SqModel = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/sq")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(dir),
-      s"$path/sq does not exist — not a saveIvfSqIndex layout")
-    val rows = spark.read.parquet(s"$path/sq").collect()
-      .map(r => r.getInt(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
-    require(rows.nonEmpty, s"$path/sq is empty — not a saveIvfSqIndex layout")
-    val dim = rows.keys.max + 1
-    SqModel(Array.tabulate(dim)(i => rows(i)._1),
-      Array.tabulate(dim)(i => rows(i)._2))
-  }
-
-  /** Approximate top-k against a stored [[saveIvfSqIndex]]: probed cells
-    * prune as whole partitions (static literal IN, as [[ivfPqKnnStored]]);
-    * scoring DECOMPOSES the reconstruction dot so the per-candidate work
-    * is ONE codegen'd dotp over the code array — never a per-candidate
-    * zip_with:
-    *   q·v̂ = q·(centroid + mn + c⊙span/255)
-    *       = [q·centroid + q·mn]  (per (query, cell), broadcast side)
-    *       + (q⊙span/255)·c      (dotp against the candidate's codes)
-    * Ranks by inner product of the reconstruction (candidates are
-    * near-unit residual reconstructions, the [[ivfPqKnnStored]] metric
-    * contract); use [[ivfSqKnnRefined]] for exact-cosine output. */
-  def ivfSqKnnStored(spark: org.apache.spark.sql.SparkSession, path: String,
-                     queries: DataFrame, k: Int, nprobe: Int = 4,
-                     qId: String = "vec_id", qVec: String = "embedding")
+  /** Approximate top-k against a stored PQ or SQ8 layout: queries probe
+    * their `nprobe` nearest cells, the probed cells' codes are scored by
+    * the layout's codec, a replicated neighbor keeps its best copy, and
+    * ranking is the shared bounded top-k. Output: (query_id,
+    * neighbor_id, rank).
+    *
+    * STATIC partition pruning: queries are a request (small by
+    * contract), so the probed cell set is collected and pushed into the
+    * scan as a literal IN — guaranteed whole-partition pruning,
+    * independent of the dynamic-pruning heuristics (which decline
+    * local-relation build sides). The probe frame is MATERIALIZED first
+    * (eager, |Q|·nprobe rows) so the collected cell set and the joined
+    * probe rows come from ONE evaluation — a nondeterministic query
+    * lineage (sample/limit over multiple files) re-executed in the join
+    * could otherwise carry cells the literal filter excluded, silently
+    * dropping candidates. */
+  def quantizedKnnStored(spark: SparkSession, path: String,
+                         queries: DataFrame, k: Int, nprobe: Int = 4,
+                         qId: String = "vec_id", qVec: String = "embedding")
   : DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val cents = readCentroids(spark, path)
-    val model = readSqModel(spark, path)
+    val codec = readCodec(spark, path)
     val centLit = typedLit(cents.map(_.toSeq).toSeq)
-    val wLit = lit(model.spans.map(_ / 255.0))
-    val probed = queries
-      .select(col(qId).as("query_id"), normalize(col(qVec)).as("qv"))
-      .withColumn("cell",
-        explode(topCells(col("qv"), cents, math.min(nprobe, cents.length))))
-      .select(col("query_id"), col("cell"),
-        (dotp(col("qv"), element_at(centLit, col("cell") + 1)) +
-          dotp(col("qv"), lit(model.mins))).as("base"),
-        zip_with(col("qv"), wLit, (q, w) => q * w).as("wq"))
+    val probed = codec.probe(queries
+        .select(col(qId).as("query_id"), normalize(col(qVec)).as("qv"))
+        .withColumn("cell",
+          explode(topCells(col("qv"), cents, math.min(nprobe, cents.length)))),
+      element_at(centLit, col("cell") + 1))
     val stored = readIvfCorpus(spark, path)
-    require(stored.columns.contains("sq_code"),
-      s"$path/corpus lacks sq_code — not a saveIvfSqIndex layout " +
-        "(use ivfKnnStored / ivfPqKnnStored for those)")
-    // materialize the probe frame before collecting its cell set — one
-    // evaluation feeds both the literal IN filter and the join, so a
-    // nondeterministic query lineage can't carry cells the filter
-    // excluded (the ivfPqKnnStored contract)
+    val codeCol = codec.layout.codeCol
+    require(stored.columns.contains(codeCol),
+      s"$path/corpus lacks $codeCol — not a complete ${codec.layout.name} layout")
     val probedM = probed.transform(graft.util.Stage.materialize)
     val probedCells = probedM.select("cell").distinct().collect()
       .map(_.getInt(0)).toSeq
+    // self-enforcing bound on the driver-side literal: the collected set
+    // is CELLS, not queries — capped by nlist regardless of how many
+    // query rows the caller passes (a violation means a corrupt layout)
     require(probedCells.size <= cents.length,
       s"probed cell set (${probedCells.size}) exceeds nlist " +
         s"(${cents.length}) — corrupt index layout at $path?")
     val scored = stored.filter(col("cell").isin(probedCells: _*))
       .join(broadcast(probedM), "cell")
       .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (col("base") +
-          dotp(col("sq_code").cast("array<double>"), col("wq"))).as("score"))
-      // replicated copies carry per-cell residual approximations — keep
-      // the best, as ivfPqKnnStored
+      .select(col("query_id"), col("neighbor_id"), codec.score.as("score"))
+      // a replicated neighbor reached via two cells carries two residual
+      // approximations — keep the better one; a plain distinct would let
+      // one neighbor occupy two top-k slots
       .groupBy("query_id", "neighbor_id")
       .agg(max("score").as("score"))
     topkRanks(scored, k)
   }
 
-  /** IVF-SQ8 nomination + exact re-rank (the shared refine tail). */
-  def ivfSqKnnRefined(spark: org.apache.spark.sql.SparkSession, path: String,
-                      queries: DataFrame, corpus: DataFrame, k: Int,
-                      refine: Int = 4, nprobe: Int = 4,
-                      qId: String = "vec_id", qVec: String = "embedding",
-                      cId: String = "vec_id", cVec: String = "embedding")
+  /** Compressed nomination with EXACT re-ranking (the FAISS refine
+    * pattern): the stored PQ or SQ8 index nominates `k × refine`
+    * candidates per query, then ONLY those are re-scored by exact cosine
+    * against the raw vector table and the true top `k` returned — most
+    * of the recall the quantization loses, for a candidate-pruned sliver
+    * of the raw vectors. `corpus` must be the id-aligned raw vector
+    * table the index was built from; the candidate set is request-bounded
+    * and broadcasts into a semi-join that prunes the raw scan. */
+  def quantizedKnnRefined(spark: SparkSession, path: String,
+                          queries: DataFrame, corpus: DataFrame, k: Int,
+                          refine: Int = 4, nprobe: Int = 4,
+                          qId: String = "vec_id", qVec: String = "embedding",
+                          cId: String = "vec_id", cVec: String = "embedding")
   : DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(refine >= 1, s"refine must be >= 1, got $refine")
-    val cand = ivfSqKnnStored(spark, path, queries, k = k * refine, nprobe,
-        qId, qVec)
-      .select("query_id", "neighbor_id")
+    val cand = quantizedKnnStored(spark, path, queries, k * refine, nprobe,
+      qId, qVec)
     refineExact(cand, queries, corpus, k, qId, qVec, cId, cVec)
   }
 
@@ -1846,7 +1765,6 @@ object Similarity {
       cr.join(broadcast(qr), cond)
         .withColumn("cos", dotp(col("qv"), col("cv"))),
       k * refine, corpus.schema(cId).dataType)
-      .select("query_id", "neighbor_id")
     refineExact(nominated, queries, corpus, k, qId, qVec, cId, cVec)
   }
 

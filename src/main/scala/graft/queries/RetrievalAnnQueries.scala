@@ -272,7 +272,7 @@ private[queries] trait RetrievalAnnQueries { self: ExtensionQueryHelpers =>
     fs.delete(new org.apache.hadoop.fs.Path(root), true)
     Similarity.saveIvfPqIndex(e, root, nlist = 8, m = 16, ksub = 16,
       kmeansIters = 2, pqIters = 2, replicate = 2)
-    val top = Similarity.ivfPqKnnStored(s, root, queries, k = 5, nprobe = 8)
+    val top = Similarity.quantizedKnnStored(s, root, queries, k = 5, nprobe = 8)
       .collect().map(r => r.getLong(0) -> r.getLong(1))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val hits = srcs.count { case (id, _) =>
@@ -321,9 +321,9 @@ private[queries] trait RetrievalAnnQueries { self: ExtensionQueryHelpers =>
     // serializing two multi-job probe chains on the driver thread
     val probes = graft.util.Par.run(Seq(
       () => hitsOf(
-        Similarity.ivfPqKnnStored(s, root, queries, k = 5, nprobe = 8)),
+        Similarity.quantizedKnnStored(s, root, queries, k = 5, nprobe = 8)),
       () => hitsOf(
-        Similarity.ivfPqKnnRefined(s, root, queries, e, k = 5, refine = 4,
+        Similarity.quantizedKnnRefined(s, root, queries, e, k = 5, refine = 4,
           nprobe = 8))))
     val (plain, refined) = (probes(0), probes(1))
     Seq((srcs.length.toLong, if (refined >= 18) 1 else 0,
@@ -1295,9 +1295,9 @@ private[queries] trait RetrievalAnnQueries { self: ExtensionQueryHelpers =>
       srcs.count { case (id, _) =>
         top.getOrElse(id + 100000L, Set.empty[Long]).contains(id) }
     }
-    val plain = hitsOf(graft.operators.Similarity.ivfSqKnnStored(
+    val plain = hitsOf(graft.operators.Similarity.quantizedKnnStored(
       s, root, queries, k = 5, nprobe = 8))
-    val refined = hitsOf(graft.operators.Similarity.ivfSqKnnRefined(
+    val refined = hitsOf(graft.operators.Similarity.quantizedKnnRefined(
       s, root, queries, e, k = 5, refine = 4, nprobe = 8))
     Seq((srcs.length.toLong, if (refined >= 18) 1 else 0,
       if (refined >= plain) 1 else 0))

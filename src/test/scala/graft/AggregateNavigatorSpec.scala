@@ -31,7 +31,7 @@ class AggregateNavigatorSpec extends SparkSpec {
     d
   }
 
-  private lazy val sums = AggregateNavigator.loadSummaries(spark, root)
+  private lazy val sums = AggregateNavigator.loadStore(spark, root)._1
 
   test("routing picks the smallest covering summary; base when none covers") {
     assert(sums.size == 2)
@@ -92,7 +92,7 @@ class AggregateNavigatorSpec extends SparkSpec {
       "rf_ls" -> Seq("l_returnflag", "l_linestatus")),
       measures, d)
     val refreshed = AggregateNavigator.refreshSummaries(delta, d)
-    assert(AggregateNavigator.storedMeasures(spark, d).toSet == measures.toSet)
+    assert(AggregateNavigator.loadStore(spark, d)._2.toSet == measures.toSet)
     // refreshed store answers == full-data answers at every grain (and
     // the coarser routed request), including fresh cells (1996+ years
     // never seen at build time)
@@ -148,7 +148,7 @@ class AggregateNavigatorSpec extends SparkSpec {
     val q = graft.streaming.CubeStreaming.startRefreshSummaries(
       stream, s"$d/store", s"$d/ckpt", Trigger.AvailableNow())
     q.awaitTermination(120000)
-    val sums2 = AggregateNavigator.loadSummaries(spark, s"$d/store")
+    val sums2 = AggregateNavigator.loadStore(spark, s"$d/store")._1
     for (dims <- Seq(Seq("l_returnflag"),
       Seq("l_returnflag", "l_linestatus", "ship_year"))) {
       val (ans, via) = AggregateNavigator.query(spark, li, sums2, dims, measures)
@@ -286,7 +286,7 @@ class AggregateNavigatorSpec extends SparkSpec {
   }
 
   test("manifest round-trips grains, paths, and row counts") {
-    val rebuilt = AggregateNavigator.loadSummaries(spark, root)
+    val rebuilt = AggregateNavigator.loadStore(spark, root)._1
     assert(rebuilt.toSet == sums.toSet)
     rebuilt.foreach { s: Summary =>
       assert(spark.read.parquet(s.path).count() == s.rows)
@@ -336,7 +336,7 @@ class AggregateNavigatorSpec extends SparkSpec {
     assert(e.getMessage.contains("min") && e.getMessage.contains("rebuild"))
     // the failed retraction must not have touched the store
     val (ans, _) = AggregateNavigator.query(spark, li,
-      AggregateNavigator.loadSummaries(spark, d), Seq("l_returnflag"), measures)
+      AggregateNavigator.loadStore(spark, d)._1, Seq("l_returnflag"), measures)
     val direct = li.groupBy("l_returnflag")
       .agg(measures.head.fromBase, measures.tail.map(_.fromBase): _*)
     assert(ans.except(direct).isEmpty && direct.except(ans).isEmpty)
@@ -416,7 +416,7 @@ class AggregateNavigatorSpec extends SparkSpec {
     val direct = survivors.groupBy("l_returnflag")
       .agg(addMeasures.head.fromBase, addMeasures.tail.map(_.fromBase): _*)
     val (ans, _) = AggregateNavigator.query(spark, survivors,
-      AggregateNavigator.loadSummaries(spark, d), Seq("l_returnflag"),
+      AggregateNavigator.loadStore(spark, d)._1, Seq("l_returnflag"),
       addMeasures)
     assert(ans.except(direct).isEmpty && direct.except(ans).isEmpty)
   }
@@ -445,7 +445,7 @@ class AggregateNavigatorSpec extends SparkSpec {
     assert(e.getMessage.contains("over-retraction"))
     val (ans, _) = AggregateNavigator.query(spark,
       li.filter(col("ship_year") === 1995),
-      AggregateNavigator.loadSummaries(spark, d), Seq("l_returnflag"),
+      AggregateNavigator.loadStore(spark, d)._1, Seq("l_returnflag"),
       addMeasures)
     val direct = li.filter(col("ship_year") === 1995).groupBy("l_returnflag")
       .agg(addMeasures.head.fromBase, addMeasures.tail.map(_.fromBase): _*)

@@ -50,35 +50,12 @@ class AnnIndexSpec extends SparkSpec {
 
   test("maintainIndex on a healthy store is a NO-OP: no rebuild dir, no " +
     "jobs beyond the footer census") {
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val dir = healthyIndex()
     val fresh = s"${dir}_rebuilt"
-    def countJobs(marker: String)(body: => Unit): Int = {
-      val jobs = new AtomicInteger(0)
-      val seen = new CountDownLatch(1)
-      val l = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit = {
-          val g = Option(js.properties)
-            .map(_.getProperty("spark.jobGroup.id", "")).getOrElse("")
-          if (g == marker) seen.countDown() else jobs.incrementAndGet()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        body
-        spark.sparkContext.setJobGroup(marker, "flush")
-        spark.range(1).count()
-        spark.sparkContext.clearJobGroup()
-        assert(seen.await(60, TimeUnit.SECONDS), "listener bus never flushed")
-        jobs.get()
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
-    val censusJobs = countJobs("graft-maint-census") {
+    val censusJobs = jobsDuring {
       Similarity.indexHealth(spark, dir).collect(): Unit
     }
-    val maintJobs = countJobs("graft-maint-noop") {
+    val maintJobs = jobsDuring {
       val row = Similarity.maintainIndex(spark, dir, fresh).collect().head
       assert(!row.getAs[Boolean]("rebuilt"))
       assert(row.isNullAt(row.fieldIndex("new_path")))
@@ -134,7 +111,7 @@ class AnnIndexSpec extends SparkSpec {
     assert(h.getAs[Long]("rows_total") == 64 &&
       h.getAs[Long]("rows_appended") == 0)
     // the fresh store serves: stored kNN against itself finds itself
-    val knn = Similarity.ivfSqKnnStored(spark, fresh,
+    val knn = Similarity.quantizedKnnStored(spark, fresh,
       base.limit(4), k = 1, nprobe = 4)
     assert(knn.count() == 4)
   }
@@ -155,6 +132,32 @@ class AnnIndexSpec extends SparkSpec {
       .agg(max("blk"), max("cid")).head()
     assert(pq.getInt(0) + 1 == 4 && pq.getInt(1) + 1 == 8,
       "rebuilt codebooks must keep the stored m and ksub")
+  }
+
+  // ------------------------------------------------------------------
+  // stamp order: the build stamp asserts a complete layout
+  // ------------------------------------------------------------------
+
+  test("a save whose centroid write fails leaves no build stamp, for " +
+    "flat, PQ and SQ8") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.failcent.impl", classOf[FailingCentroidsFs].getName)
+    val root = java.nio.file.Files.createTempDirectory("stamp_order").toString
+    val base = sineCorpus(32)
+    val saves: Seq[(String, String => Unit)] = Seq(
+      "flat" -> (p => Similarity.saveIvfIndex(base, p, nlist = 2,
+        kmeansIters = 1, replicate = 1)),
+      "pq" -> (p => Similarity.saveIvfPqIndex(base, p, nlist = 2, m = 4,
+        ksub = 4, kmeansIters = 1, pqIters = 1, replicate = 1): Unit),
+      "sq8" -> (p => Similarity.saveIvfSqIndex(base, p, nlist = 2,
+        kmeansIters = 1, replicate = 1): Unit))
+    saves.foreach { case (name, save) =>
+      intercept[Exception](save(s"failcent:$root/$name"))
+      assert(new java.io.File(s"$root/$name/corpus").isDirectory,
+        s"$name: the corpus write should still have landed")
+      assert(!new java.io.File(s"$root/$name/corpus/_build_stamp").exists,
+        s"$name: a failed centroid write left a stamped layout")
+    }
   }
 
   // ------------------------------------------------------------------
@@ -228,7 +231,7 @@ class AnnIndexSpec extends SparkSpec {
     assert(Similarity.readLineage(spark, fresh) ==
       Some((srcPath, "vec_id", "embedding")))
     // the fresh store serves
-    assert(Similarity.ivfSqKnnStored(spark, fresh, base.limit(4), k = 1,
+    assert(Similarity.quantizedKnnStored(spark, fresh, base.limit(4), k = 1,
       nprobe = 4).count() == 4)
   }
 
@@ -255,7 +258,7 @@ class AnnIndexSpec extends SparkSpec {
     val layout = Similarity.rebuildStoredIndex(spark, dir, s"$root/y",
       source = Some(base), kmeansIters = 2, replicate = 1)
     assert(layout == "ivf-sq8")
-    assert(Similarity.ivfSqKnnStored(spark, s"$root/y", base.limit(2),
+    assert(Similarity.quantizedKnnStored(spark, s"$root/y", base.limit(2),
       k = 1, nprobe = 4).count() == 2)
   }
 
@@ -284,5 +287,39 @@ class AnnIndexSpec extends SparkSpec {
     Similarity.saveIvfPqIndex(base, bare, nlist = 4, m = 4, ksub = 8,
       kmeansIters = 2, replicate = 1)
     assert(Similarity.readLineage(spark, bare).isEmpty)
+  }
+}
+
+/** The local filesystem under the `failcent` scheme, except that every
+  * create or mkdirs under a `/centroids` path throws: it fails exactly
+  * the centroid write of an index save. */
+class FailingCentroidsFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+  import org.apache.hadoop.fs.permission.FsPermission
+  import org.apache.hadoop.util.Progressable
+
+  override def getUri: java.net.URI = java.net.URI.create("failcent:///")
+  override def getScheme: String = "failcent"
+
+  private def refuse(f: Path): Unit =
+    if (f.toUri.getPath.contains("/centroids"))
+      throw new java.io.IOException(s"injected write failure at $f")
+
+  override def mkdirs(f: Path): Boolean = { refuse(f); super.mkdirs(f) }
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+    refuse(f); super.mkdirs(f, permission)
+  }
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    refuse(f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+                      bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    refuse(f)
+    super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
   }
 }

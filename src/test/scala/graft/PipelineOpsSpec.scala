@@ -810,7 +810,7 @@ class PipelineOpsSpec extends SparkSpec {
     val schema = spark.read.parquet(s"$dir/corpus").schema.fieldNames.toSet
     assert(schema == Set("neighbor_id", "pq_code", "cell"),
       s"compressed layout must not store vectors: $schema")
-    val served = Similarity.ivfPqKnnStored(spark, dir, plantedQueries,
+    val served = Similarity.quantizedKnnStored(spark, dir, plantedQueries,
       k = 5, nprobe = 4)
     val top = served.collect().map(r => r.getLong(0) -> r.getLong(1))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -828,15 +828,15 @@ class PipelineOpsSpec extends SparkSpec {
     val err = intercept[IllegalArgumentException] {
       Similarity.ivfKnnStored(spark, dir, plantedQueries, k = 5).collect()
     }
-    assert(err.getMessage.contains("ivfPqKnnStored"))
+    assert(err.getMessage.contains("quantizedKnnStored"))
     // delta append: exact copies of the planted sources under fresh ids
     // get assigned, residual-encoded against the frozen model, and
     // surface next to their originals — the index itself never rewritten
     import spark.implicits._
     val copies = plantedSrcs.toSeq.map { case (id, v) => (id + 200000L, v) }
       .toDF("vec_id", "embedding")
-    Similarity.appendToIvfPqIndex(copies, dir, replicate = 2)
-    val top2 = Similarity.ivfPqKnnStored(spark, dir, plantedQueries,
+    Similarity.appendToQuantizedIndex(copies, dir, replicate = 2)
+    val top2 = Similarity.quantizedKnnStored(spark, dir, plantedQueries,
       k = 5, nprobe = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -852,7 +852,7 @@ class PipelineOpsSpec extends SparkSpec {
     // LAW: with every cell probed and k·refine covering the whole corpus,
     // every vector is a candidate, so the exact re-rank IS brute force —
     // row-for-row, rank-for-rank, bit-for-bit on the cosine
-    val refined = Similarity.ivfPqKnnRefined(spark, dir, plantedQueries,
+    val refined = Similarity.quantizedKnnRefined(spark, dir, plantedQueries,
       uniform10k, k = 5, refine = 2000, nprobe = 16)
     val brute = Similarity.bruteKnn(plantedQueries, uniform10k, k = 5)
     assert(refined.except(brute).isEmpty && brute.except(refined).isEmpty,
@@ -864,8 +864,8 @@ class PipelineOpsSpec extends SparkSpec {
       df.collect().map(r => r.getLong(0) -> r.getLong(1))
         .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap)
     val plain = hits(
-      Similarity.ivfPqKnnStored(spark, dir, plantedQueries, k = 5, nprobe = 4))
-    val ref4 = hits(Similarity.ivfPqKnnRefined(spark, dir, plantedQueries,
+      Similarity.quantizedKnnStored(spark, dir, plantedQueries, k = 5, nprobe = 4))
+    val ref4 = hits(Similarity.quantizedKnnRefined(spark, dir, plantedQueries,
       uniform10k, k = 5, refine = 4, nprobe = 4))
     assert(ref4 >= plain && ref4 >= 18,
       s"refined recall $ref4/20 regressed below unrefined $plain/20")

@@ -466,7 +466,7 @@ class Round14Spec extends SparkSpec {
   }
 
   // ------------------------------------------------------------------
-  // IVF-SQ8 stored index (saveIvfSqIndex / ivfSqKnnStored)
+  // IVF-SQ8 stored index (saveIvfSqIndex / quantizedKnnStored)
   // ------------------------------------------------------------------
 
   test("ivfSq store round-trips the grid and serves self-retrieval") {
@@ -488,12 +488,12 @@ class Round14Spec extends SparkSpec {
       (r.getLong(0) + 1000L,
         r.getSeq[Float](1).toArray.map(x => x + 1e-4f))
     }.toSeq.toDF("vec_id", "embedding")
-    val top1 = Similarity.ivfSqKnnRefined(spark, root, qs, df, k = 1,
+    val top1 = Similarity.quantizedKnnRefined(spark, root, qs, df, k = 1,
         refine = 4, nprobe = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     top1.foreach { case (q, n) => assert(q - 1000L == n, s"query $q got $n") }
     // replicated copies never occupy two top-k slots
-    val top5 = Similarity.ivfSqKnnStored(spark, root, qs, k = 5, nprobe = 4)
+    val top5 = Similarity.quantizedKnnStored(spark, root, qs, k = 5, nprobe = 4)
     val dup = top5.groupBy(col("query_id"), col("neighbor_id"))
       .count().filter(col("count") > 1).count()
     assert(dup == 0, s"$dup duplicate (query, neighbor) rows in top-k")
@@ -502,7 +502,7 @@ class Round14Spec extends SparkSpec {
     val schema = spark.read.parquet(s"$root/corpus").columns.toSet
     assert(schema == Set("neighbor_id", "sq_code", "cell"),
       s"compressed layout must not store vectors: $schema")
-    val pruned = Similarity.ivfSqKnnStored(spark, root, qs, k = 5, nprobe = 2)
+    val pruned = Similarity.quantizedKnnStored(spark, root, qs, k = 5, nprobe = 2)
     pruned.collect()
     val scanLine = pruned.queryExecution.executedPlan.toString
       .linesIterator.find(l => l.contains("Scan parquet") && l.contains("corpus"))
@@ -527,7 +527,7 @@ class Round14Spec extends SparkSpec {
       model.spans.forall(v => !v.isNaN && !v.isInfinite),
       "degenerate vector leaked NaN/Inf into the SQ grid")
     val qs = df.filter(col("vec_id") < 4)
-    val top = Similarity.ivfSqKnnRefined(spark, root, qs, df, k = 3,
+    val top = Similarity.quantizedKnnRefined(spark, root, qs, df, k = 3,
       refine = 4, nprobe = 4)
     assert(top.count() == 12, "zero vector emptied the kNN results")
   }
@@ -552,8 +552,8 @@ class Round14Spec extends SparkSpec {
     // exact copies of vectors 0..3 under fresh ids
     val delta = df.filter(col("vec_id") < 4)
       .select((col("vec_id") + 500L).as("vec_id"), col("embedding"))
-    Similarity.appendToIvfSqIndex(delta, root)
-    val top = Similarity.ivfSqKnnStored(spark, root,
+    Similarity.appendToQuantizedIndex(delta, root)
+    val top = Similarity.quantizedKnnStored(spark, root,
         df.filter(col("vec_id") < 4), k = 3, nprobe = 4)
       .collect().groupBy(_.getLong(0)).view
       .mapValues(_.map(_.getLong(1)).toSet).toMap
@@ -563,18 +563,17 @@ class Round14Spec extends SparkSpec {
     }
   }
 
-  test("ivfSqKnnStored refuses a PQ layout by name") {
+  test("quantizedKnnStored refuses a flat layout by name") {
     val df = vecFixture
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_r14spec_ivfsq_pq"
+    val root = s"${System.getProperty("java.io.tmpdir")}/graft_r14spec_ivfq_flat"
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(new org.apache.hadoop.fs.Path(root), true)
-    Similarity.saveIvfPqIndex(df, root, nlist = 2, m = 4, ksub = 4,
-      kmeansIters = 1, pqIters = 1)
+    Similarity.saveIvfIndex(df, root, nlist = 2, kmeansIters = 1)
     val e = intercept[IllegalArgumentException] {
-      Similarity.ivfSqKnnStored(spark, root, df.limit(1), k = 1)
+      Similarity.quantizedKnnStored(spark, root, df.limit(1), k = 1)
     }
-    assert(e.getMessage.contains("sq"), e.getMessage)
+    assert(e.getMessage.contains("ivfKnnStored"), e.getMessage)
   }
 
   // ------------------------------------------------------------------

@@ -941,34 +941,11 @@ class StreamingSpec extends SparkSpec {
 
   test("maintainStore on a healthy store runs no jobs beyond the " +
     "footer census (metadata-sized no-op)") {
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val dir = plantStore(nBatches = 2, nDocs = 3)
-    def countJobs(marker: String)(body: => Unit): Int = {
-      val jobs = new AtomicInteger(0)
-      val seen = new CountDownLatch(1)
-      val l = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit = {
-          val g = Option(js.properties)
-            .map(_.getProperty("spark.jobGroup.id", "")).getOrElse("")
-          if (g == marker) seen.countDown() else jobs.incrementAndGet()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        body
-        spark.sparkContext.setJobGroup(marker, "flush")
-        spark.range(1).count()
-        spark.sparkContext.clearJobGroup()
-        assert(seen.await(60, TimeUnit.SECONDS), "listener bus never flushed")
-        jobs.get()
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
-    val censusJobs = countJobs("graft-store-census") {
+    val censusJobs = jobsDuring {
       StoreCompaction.storeHealth(spark, dir).collect(): Unit
     }
-    val maintJobs = countJobs("graft-store-noop") {
+    val maintJobs = jobsDuring {
       val row = DocStreaming.maintainStore(spark, dir).collect().head
       assert(!row.getAs[Boolean]("compacted"))
     }

@@ -67,6 +67,19 @@ class UtilSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("benchempty")).isEmpty)
   }
 
+  test("BenchCompare.baselineMismatch refuses, by name, a record taken " +
+    "at another sf or core count") {
+    val rec = """{"cpus":"32","sf":"/d/sf0.1","queries":{"q1":1.0}}"""
+    assert(BenchCompare.baselineMismatch(rec, "/d/sf0.1", 32).isEmpty)
+    assert(BenchCompare.baselineMismatch(rec, "/d/sf0.01", 32)
+      .contains("its sf is /d/sf0.1, this run's is /d/sf0.01"))
+    assert(BenchCompare.baselineMismatch(rec, "/d/sf0.1", 4)
+      .contains("its cpus is 32, this run's is 4"))
+    // an older record that never stated its core count is refused too
+    assert(BenchCompare.baselineMismatch("""{"sf":"/d/sf0.1"}""",
+      "/d/sf0.1", 32).contains("its cpus is unrecorded, this run's is 32"))
+  }
+
   // ------------------------------------------------------------------
   // Stage.materialize policy
   // ------------------------------------------------------------------
