@@ -1,9 +1,9 @@
 package graft
-import graft.util.GraftSession
+import graft.util.{GraftSession, Jobs}
 
 /** Single-query profiler: sbt "runMain graft.QBench <name> [reps] [sfDir]".
-  * Prints per-rep wall time; use with the Spark UI off and explain on
-  * demand (SPARK_GRAFT_EXPLAIN=1). */
+  * Prints per-rep wall time and the rep's Spark job count; use with the
+  * Spark UI off and explain on demand (SPARK_GRAFT_EXPLAIN=1). */
 object QBench {
   def main(args: Array[String]): Unit = {
     val name = args(0)
@@ -11,38 +11,18 @@ object QBench {
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.local(cpus)
-    // SPARK_GRAFT_JOBLOG=1: per-job wall time + call site on stderr —
-    // the guide-§1 "where does the time go" instrument for multi-job
-    // queries (closures, index builds, eager materializations), since
-    // the UI is off in bench runs
-    if (sys.env.contains("SPARK_GRAFT_JOBLOG")) {
-      val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            val site = Option(j.properties)
-              .flatMap(p => Option(p.getProperty("spark.job.description"))
-                .orElse(Option(p.getProperty("callSite.short"))))
-              .getOrElse("?")
-            starts.put(j.jobId, (System.nanoTime(), site)): Unit
-          }
-          override def onJobEnd(
-              j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            Option(starts.remove(j.jobId)).foreach { case (t0, site) =>
-              System.err.println(f"[job] ${j.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%7.3fs  $site")
-            }
-          }
-        })
-    }
     // comma-separated names: profile several queries in ONE JVM (startup
     // costs ~30 s per sbt runMain — amortize it across a profiling sweep)
     name.split(",").map(_.trim).filter(_.nonEmpty).foreach { nm =>
       val fn = SparkEntry.queries(nm)
       (1 to reps).foreach { r =>
-        val t0 = System.nanoTime()
-        val n = fn(spark, sfDir).count()
-        println(f"[qbench] $nm rep$r ${(System.nanoTime() - t0) / 1e9}%.2fs rows=$n")
+        // the job count's flush job runs after the timed region
+        val ((n, secs), jobs) = Jobs.counted(spark) {
+          val t0 = System.nanoTime()
+          val n = fn(spark, sfDir).count()
+          (n, (System.nanoTime() - t0) / 1e9)
+        }
+        println(f"[qbench] $nm rep$r $secs%.2fs rows=$n jobs=$jobs")
       }
       if (sys.env.contains("SPARK_GRAFT_EXPLAIN"))
         fn(spark, sfDir).explain("formatted")

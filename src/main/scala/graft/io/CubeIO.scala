@@ -4,6 +4,7 @@ import scala.collection.immutable.ListMap
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 import graft.model._
@@ -428,7 +429,8 @@ object CubeIO {
     // into them and their old files are stale. Directory names use the
     // SAME cast-to-string Spark's partition writer applies (collected as
     // an extra projection) — String.valueOf of the JVM value diverges for
-    // timestamps (trailing ".0") and would silently miss the delete.
+    // timestamps (trailing ".0") and would silently miss the delete —
+    // and escaped by the partition-path function that writer uses.
     val aliveStr = survivors
       .select(pCols.map(c => col(c).cast("string")): _*).distinct().collect()
       .map(_.toSeq).toSet
@@ -440,7 +442,8 @@ object CubeIO {
       val fs = factRoot.getFileSystem(spark.sessionState.newHadoopConf())
       deadStr.foreach { vals =>
         val dir = pCols.zip(vals).map { case (c, v) =>
-          s"$c=${escapePartitionValue(if (v == null) null else v.toString)}"
+          ExternalCatalogUtils.getPartitionPathString(c,
+            if (v == null) null else v.toString)
         }.mkString("/")
         fs.delete(new Path(factRoot, dir), true): Unit
       }
@@ -493,17 +496,4 @@ object CubeIO {
     fs.mkdirs(marker)
     true
   }
-
-  /** Hive partition-directory value escaping (the convention Spark's
-    * writers use): special/control characters become %XX, null becomes
-    * the default-partition marker — so the directory we delete is the
-    * directory the writer created. */
-  private def escapePartitionValue(v: String): String =
-    if (v == null || v.isEmpty) "__HIVE_DEFAULT_PARTITION__"
-    else v.flatMap { c =>
-      val special = "\"#%'*/:=?\\{[]^"
-      if (c < ' ' || c == '\u007F' || special.contains(c))
-        f"%%${c.toInt}%02X"
-      else c.toString
-    }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
+import graft.streaming.StoreCompaction
 
 /** Corpus-level text analysis (north-star extension; no reference
   * counterpart): term statistics over a document table. */
@@ -230,10 +231,10 @@ object Corpus {
     * (requests, not corpus) — it broadcast-joins to the postings, so the
     * index itself never shuffles for the probe; only matched postings
     * (Σ per query term df rows) flow into the (query, doc) score agg;
-    * ranking is the bounded-top-k aggregation
-    * ([[graft.model.Aggregators.TopKByScore]], map-side combine — at
-    * most k rows per (partition, query) shuffle, never a global or
-    * data-sized window.
+    * ranking is the bounded top-k ([[graft.model.Aggregators.topKByScore]]
+    * — the integral-id heap, or the built-in window limit for any other
+    * id type; either way at most k rows per (partition, query) shuffle).
+    * `doc_id` keeps its input type.
     *
     * Determinism for cross-engine checks: scores are rounded to 4
     * decimals BEFORE ranking, so sub-ULP summation-order drift (ln is
@@ -280,12 +281,6 @@ object Corpus {
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
       .select("term", "doc_id", "tf")
 
-  private def bm25Batches(fs: org.apache.hadoop.fs.FileSystem,
-                          dir: org.apache.hadoop.fs.Path): Seq[Long] =
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case s if s.startsWith("batch=") => s.drop(6).toLong }
-
   /** The committed-batch set: `stats/batch=N` is written LAST and is the
     * batch's commit marker — postings/doclen directories without it are
     * crash debris ([[bm25Recover]] removes them; the probe ignores them
@@ -293,7 +288,8 @@ object Corpus {
   private def bm25Committed(spark: org.apache.spark.sql.SparkSession,
                             path: String): Seq[Long] = {
     val p = new org.apache.hadoop.fs.Path(s"$path/stats")
-    bm25Batches(p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+    StoreCompaction.batches(p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+      .map(_._1)
   }
 
   /** Heal the store before trusting it: finish or discard any
@@ -314,7 +310,7 @@ object Corpus {
     val conf = spark.sessionState.newHadoopConf()
     for (sub <- Seq("postings", "doclen", "stats")) {
       val d = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      graft.streaming.StoreCompaction.recover(d.getFileSystem(conf), d)
+      StoreCompaction.recover(d.getFileSystem(conf), d)
     }
   }
 
@@ -323,13 +319,14 @@ object Corpus {
     val conf = spark.sessionState.newHadoopConf()
     bm25RecoverCompaction(spark, path)
     val statsDir = new org.apache.hadoop.fs.Path(s"$path/stats")
-    val committed = bm25Batches(statsDir.getFileSystem(conf), statsDir).toSet
+    val committed = StoreCompaction.batches(statsDir.getFileSystem(conf),
+      statsDir).map(_._1).toSet
     for (sub <- Seq("postings", "doclen")) {
       val d = new org.apache.hadoop.fs.Path(s"$path/$sub")
       val fs = d.getFileSystem(conf)
-      bm25Batches(fs, d).filterNot(b => b == -1L || committed(b)).foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$sub/batch=$b"), true)
-      }
+      StoreCompaction.batches(fs, d)
+        .filterNot { case (b, _) => b == -1L || committed(b) }
+        .foreach { case (_, dir) => fs.delete(dir, true) }
     }
   }
 
@@ -351,7 +348,6 @@ object Corpus {
   def compactBm25Store(spark: org.apache.spark.sql.SparkSession,
                        path: String): Boolean = {
     bm25Recover(spark, path)
-    import graft.streaming.StoreCompaction
     StoreCompaction.compact(spark, s"$path/postings",
       Seq("term", "doc_id", "tf")) |
     StoreCompaction.compact(spark, s"$path/doclen", Seq("doc_id", "dl")) |
@@ -376,7 +372,6 @@ object Corpus {
   def maintainBm25Store(spark: org.apache.spark.sql.SparkSession,
                         path: String, maxLiveBatches: Int = 16)
   : org.apache.spark.sql.DataFrame = {
-    import graft.streaming.StoreCompaction
     // FULL heal, not just compaction recovery: uncommitted batch dirs
     // (written but never reached the stats commit marker) are crash
     // debris no probe ever reads — censusing them would report a state
@@ -515,14 +510,8 @@ object Corpus {
       .join(broadcast(qt), "term")
       .groupBy("query_id", "doc_id")
       .agg(round(sum("weight"), 4).as("score"))
-    val topk = udaf(new graft.model.Aggregators.TopKByScore(k),
-      org.apache.spark.sql.Encoders.product[graft.model.Aggregators.ScoredId])
-    scored
-      .groupBy("query_id")
-      .agg(topk(col("score"), col("doc_id").cast("long")).as("tk"))
-      .select(col("query_id"), posexplode(col("tk.items")).as(Seq("idx", "it")))
-      .select(col("query_id"), col("it.id").as("doc_id"),
-        (col("idx") + 1).as("rank"), col("it.score").as("score"))
+    graft.model.Aggregators.topKByScore(scored, Seq("query_id"), "score",
+      "doc_id", k)
   }
 
   /** Temperature-weighted corpus mixing (the multi-source sampling recipe:

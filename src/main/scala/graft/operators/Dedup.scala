@@ -1320,21 +1320,14 @@ object Dedup {
     val rebuilt = rebuildWithoutPositions(delta,
       stored.unionByName(freshLosers), idCol, textCol, sep)
     if (update) {
-      val bid = batchId.getOrElse(nextParagraphBatch(spark, root))
+      val bid = batchId.getOrElse {
+        val dir = new org.apache.hadoop.fs.Path(s"$root/hashes")
+        graft.streaming.StoreCompaction.nextBatch(
+          dir.getFileSystem(spark.sessionState.newHadoopConf()), dir)
+      }
       fresh.select("__h").distinct()
         .write.mode("overwrite").parquet(s"$root/hashes/batch=$bid")
     }
     rebuilt
-  }
-
-  /** Next free batch id of a paragraph store — driver-side listing of
-    * the hive `batch=` dirs (O(batches) tiny names). */
-  private def nextParagraphBatch(spark: org.apache.spark.sql.SparkSession,
-                                 root: String): Long = {
-    val dir = new org.apache.hadoop.fs.Path(s"$root/hashes")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(dir).filter(_.isDirectory).map(_.getPath.getName)
-      .collect { case n if n.startsWith("batch=") => n.drop(6).toLong }
-      .foldLeft(-1L)(math.max) + 1
   }
 }

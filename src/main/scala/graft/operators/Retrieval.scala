@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Hybrid retrieval: fuse the rankings of several retrievers (lexical
@@ -17,11 +17,12 @@ import org.apache.spark.sql.functions._
   * Spark-native.
   *
   * Scale shape: each input ranking is already bounded per query by its
-  * retriever's own top-k (the BM25 probe and every kNN path rank via
-  * bounded heaps), so fusion sees at most queries × Σ per-retriever k
-  * rows — one union, one (query_id, doc_id) aggregation, then the same
-  * bounded [[graft.model.Aggregators.TopKByScore]] heap the kNN paths
-  * use for the final top-k. No window over data-sized input anywhere.
+  * retriever's own top-k (the BM25 probe and every kNN path rank through
+  * [[graft.model.Aggregators.topKByScore]]), so fusion sees at most
+  * queries × Σ per-retriever k rows — one union, one (query_id, doc_id)
+  * aggregation, then the same bounded top-k for the final ranking:
+  * the integral-id heap, or for string ids the built-in window limit,
+  * which keeps at most k rows per (partition, query) before the shuffle.
   *
   * Determinism: the fused score is rounded to 4 decimals BEFORE ranking
   * (the q85 doctrine — cross-engine float drift cannot flip a rank) and
@@ -47,53 +48,13 @@ object Retrieval {
       require(cols.forall(r.columns.contains),
         s"each ranking needs columns $cols, got ${r.columns.toSeq}")
     }
-    val unioned = rankings
+    val scored = rankings
       .map(_.select(cols.map(col): _*))
       .reduce(_ unionByName _)
-    val scored = unioned
       .groupBy("query_id", "doc_id")
       .agg(round(sum(lit(1.0) / (lit(kRrf) + col("rank"))), 4).as("rrf"))
-    // bounded top-k heap per query — the kNN ranking doctrine: integral
-    // ids on the primitive-long heap, string ids (URL/UUID-keyed
-    // corpora) on the code-point-ordered string heap. Only exotic id
-    // types (dates, binaries) fall back to a query-keyed window (never
-    // data-sized: fusion input is already ≤ queries × Σ per-retriever k)
-    val idType = unioned.schema("doc_id").dataType
-    val integralId = idType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
-    if (integralId) {
-      val topk = udaf(new graft.model.Aggregators.TopKByScore(k),
-        Encoders.product[graft.model.Aggregators.ScoredId])
-      scored
-        .groupBy("query_id")
-        .agg(topk(col("rrf"), col("doc_id").cast("long")).as("tk"))
-        .select(col("query_id"), posexplode(col("tk.items")).as(Seq("idx", "it")))
-        .select(col("query_id"), col("it.id").cast(idType).as("doc_id"),
-          (col("idx") + 1).cast("int").as("rank"), col("it.score").as("rrf"))
-    } else if (idType == org.apache.spark.sql.types.StringType) {
-      val topk = udaf(new graft.model.Aggregators.TopKByScoreStr(k),
-        Encoders.product[graft.model.Aggregators.ScoredStrId])
-      scored
-        .groupBy("query_id")
-        .agg(topk(col("rrf"), col("doc_id")).as("tk"))
-        .select(col("query_id"), posexplode(col("tk.items")).as(Seq("idx", "it")))
-        .select(col("query_id"), col("it.id").as("doc_id"),
-          (col("idx") + 1).cast("int").as("rank"), col("it.score").as("rrf"))
-    } else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id")
-        .orderBy(col("rrf").desc, col("doc_id").asc)
-      scored
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("doc_id"),
-          col("rank").cast("int").as("rank"), col("rrf"))
-    }
+    graft.model.Aggregators.topKByScore(scored, Seq("query_id"), "rrf",
+      "doc_id", k)
   }
 
   /** Convenience hybrid search: BM25 over `docs(idCol, textCol)` fused

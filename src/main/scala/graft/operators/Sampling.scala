@@ -163,10 +163,11 @@ object Sampling {
     * histogram" curation step (big boilerplate clusters contribute the
     * same number of examples as rare ones).
     *
-    * Scale shape: the bounded top-k aggregation
-    * ([[graft.model.Aggregators.TopKByScore]]) — a shuffle carries at
-    * most `quota` (hash, id) pairs per (partition, cluster), never the
-    * rows and never a data-sized window sort; survivors join back by id
+    * Scale shape: the bounded per-cluster top-k
+    * ([[graft.model.Aggregators.topKByScore]]: the heap for integral
+    * ids, the built-in window limit for any other id type) — a shuffle
+    * carries at most `quota` (hash, id) pairs per (partition, cluster),
+    * never the rows; survivors join back by id, in the id's own type
     * (size-guarded broadcast under AQE). Selection order is
     * (score desc, id asc) over score = −hash-as-double, i.e. ascending
     * hash with id tie-break — ties from the 60-bit→double narrowing
@@ -175,35 +176,19 @@ object Sampling {
   def diversitySample(df: DataFrame, idCol: String, clusterCol: String,
                       quota: Int, salt: String = ""): DataFrame = {
     require(quota > 0, s"quota must be positive, got $quota")
-    // idCol must be a non-null integral id (EntityResolution.resolve's
-    // contract): a string/UUID id would CAST to null, silently emptying
-    // the semi-join, and a null id NPEs the non-nullable ScoredId
-    // encoder — reject at plan time instead
-    val idType = df.schema(idCol).dataType
-    require(Seq("byte", "short", "integer", "long")
-      .contains(idType.typeName),
-      s"diversitySample needs an integral id column; $idCol is " +
-        s"${idType.typeName} (a non-numeric id casts to null and would " +
-        "silently drop every row)")
     val hash = graft.functions.TextFunctions.tokenHash60(
       concat(lit(salt), coalesce(col(idCol).cast("string"), lit(""))))
-    val topk = udaf(new graft.model.Aggregators.TopKByScore(quota),
-      org.apache.spark.sql.Encoders.product[graft.model.Aggregators.ScoredId])
     // a null id can't be silently hashed/dropped — fail the job, named
-    val idAsLong = when(col(idCol).isNull,
-      raise_error(lit(s"diversitySample: null id in column $idCol"))
-        .cast("long"))
-      .otherwise(col(idCol).cast("long"))
-    val keep = df
-      .select(col(clusterCol), idAsLong.as("__id"),
-        (-hash.cast("double")).as("__score"))
-      .groupBy(col(clusterCol))
-      .agg(topk(col("__score"), col("__id")).as("tk"))
-      .select(col(clusterCol), explode(col("tk.items")).as("it"))
-      .select(col(clusterCol), col("it.id").as("__id"))
+    val id = when(col(idCol).isNull,
+      raise_error(lit(s"diversitySample: null id in column $idCol")))
+      .otherwise(col(idCol))
+    val keep = graft.model.Aggregators.topKByScore(
+      df.select(col(clusterCol), id.as("__id"),
+        (-hash.cast("double")).as("__score")),
+      Seq(clusterCol), "__score", "__id", quota)
     df.join(
       graft.model.Joins.maybeBroadcast(keep.select(col("__id"))),
-      col(idCol).cast("long") === col("__id"), "left_semi")
+      col(idCol) === col("__id"), "left_semi")
   }
 
   /** Importance resampling toward a target distribution (the DSIR

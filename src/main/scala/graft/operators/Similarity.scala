@@ -1,12 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
 import graft.functions.VectorExpressions.dotp
+import graft.model.Aggregators.topKByScore
 
 /** Similarity search over an embedding column (`Array[Float]`) — north-star
   * extension. Two paths:
@@ -60,12 +60,10 @@ object Similarity {
     * vectors by cosine (ties broken by id — fully deterministic). Query
     * side is expected small → broadcast; corpus is scanned once.
     *
-    * Ranking is a bounded per-partition top-k aggregation
-    * ([[graft.model.Aggregators.TopKByScore]], map-side partial combine):
-    * the shuffle after scoring carries at most |Q|·k rows per partition,
-    * never the full |Q|·|C| scored relation a row_number window would
-    * move. Non-integral neighbor ids (no encoder for the bounded buffer)
-    * fall back to the window form.
+    * Ranking is the bounded per-group top-k
+    * ([[graft.model.Aggregators.topKByScore]]): the shuffle after scoring
+    * carries at most |Q|·k rows per partition, never the full |Q|·|C|
+    * scored relation.
     *
     * `excludeSelf` (default true) drops pairs where query_id equals
     * neighbor_id — the right semantics when queries ARE corpus rows
@@ -82,7 +80,7 @@ object Similarity {
     val cond = if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true)
     val scored = c.join(broadcast(q), cond)
       .withColumn("cos", dot(col("qv"), col("cv")))
-    rankTopK(scored, k, corpus.schema(cId).dataType)
+    topKByScore(scored, Seq("query_id"), "cos", "neighbor_id", k)
   }
 
   /** HARD-NEGATIVE MINING for contrastive/retriever training (the DPR
@@ -108,67 +106,7 @@ object Similarity {
     val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .withColumn("cos", dot(col("qv"), col("cv")))
       .filter(col("cos") >= lo && col("cos") < hi)
-    rankTopK(scored, k, corpus.schema(cId).dataType)
-  }
-
-  /** Shared ranking tail of every kNN path: per query, the top-k scored
-    * neighbors as (query_id, neighbor_id, rank, cos), (cos desc, id asc).
-    * Integral ids rank via the bounded
-    * [[graft.model.Aggregators.TopKByScore]] aggregation (map-side
-    * partial combine — the shuffle carries ≤ k rows per (partition,
-    * query), never the full scored relation); string ids via the
-    * code-point-ordered [[graft.model.Aggregators.TopKByScoreStr]];
-    * only exotic id types fall back to the row_number window.
-    *
-    * Degenerate similarities are dropped up front: a NULL cos (null
-    * embedding) would crash the aggregation's non-nullable input encoder,
-    * and a NaN cos (zero vector → NaN normalization) orders differently
-    * under Spark's desc (largest) vs Scala's total ordering (smallest) —
-    * filtering both keeps the two paths identical and treats an undefined
-    * similarity as "not a neighbor" rather than rank 1. */
-  private def rankTopK(scored0: DataFrame, k: Int,
-                       idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    val scored = scored0.filter(col("cos").isNotNull && !isnan(col("cos")))
-    val integralId = idType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
-    if (integralId) {
-      val topk = udaf(new graft.model.Aggregators.TopKByScore(k),
-        org.apache.spark.sql.Encoders.product[graft.model.Aggregators.ScoredId])
-      scored
-        .groupBy("query_id")
-        .agg(topk(col("cos"), col("neighbor_id").cast("long")).as("tk"))
-        .select(col("query_id"),
-          posexplode(col("tk.items")).as(Seq("idx", "it")))
-        .select(col("query_id"),
-          col("it.id").cast(idType).as("neighbor_id"),
-          (col("idx") + 1).as("rank"), col("it.score").as("cos"))
-    } else if (idType == org.apache.spark.sql.types.StringType) {
-      // URL/UUID-keyed corpora: the code-point-ordered string heap —
-      // same bounded-shuffle shape as the integral path, same output as
-      // the window form (UTF8String order ≡ code-point order)
-      val topk = udaf(new graft.model.Aggregators.TopKByScoreStr(k),
-        org.apache.spark.sql.Encoders.product[graft.model.Aggregators.ScoredStrId])
-      scored
-        .groupBy("query_id")
-        .agg(topk(col("cos"), col("neighbor_id")).as("tk"))
-        .select(col("query_id"),
-          posexplode(col("tk.items")).as(Seq("idx", "it")))
-        .select(col("query_id"),
-          col("it.id").as("neighbor_id"),
-          (col("idx") + 1).as("rank"), col("it.score").as("cos"))
-    } else {
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("cos").desc, col("neighbor_id").asc)
-      scored
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    }
+    topKByScore(scored, Seq("query_id"), "cos", "neighbor_id", k)
   }
 
   /** The deterministic hash stream every pseudo-random constant in this
@@ -239,8 +177,8 @@ object Similarity {
     val cands = cB.join(broadcast(qB), Seq("t", "b"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "qv", "neighbor_id", "cv").distinct()
-    rankTopK(cands.withColumn("cos", dot(col("qv"), col("cv"))), k,
-      corpus.schema(cId).dataType)
+    topKByScore(cands.withColumn("cos", dot(col("qv"), col("cv"))),
+      Seq("query_id"), "cos", "neighbor_id", k)
   }
 
   /** IVF (inverted-file) approximate kNN — the cell-probe scale path:
@@ -287,14 +225,14 @@ object Similarity {
     val assigned = c.withColumn("cell",
       explode(topCells(col("cv"), refined, math.max(replicate, 1))))
     val probed = q.withColumn("cell", explode(topCells(col("qv"), refined, nprobe)))
-    rankTopK(
+    topKByScore(
       probed.join(assigned, "cell")
         .filter(if (excludeSelf) col("query_id") =!= col("neighbor_id")
                 else lit(true))
         .select(col("query_id"), col("neighbor_id"),
           dotp(col("qv"), col("cv")).as("cos"))
         .distinct(),
-      k, corpus.schema(cId).dataType)
+      Seq("query_id"), "cos", "neighbor_id", k)
   }
 
   /** Deterministic unbiased thinning to ~`cap` rows for statistics
@@ -538,7 +476,7 @@ object Similarity {
       s"$path/corpus lacks raw vectors — a compressed PQ or SQ8 " +
         "layout? (use quantizedKnnStored for that)")
     val stored = where.map(storedAll.filter).getOrElse(storedAll)
-    rankTopK(
+    topKByScore(
       stored.join(broadcast(probed), "cell")
         // hybrid-retrieval callers (rrfFuse over a large query stream)
         // have INDEPENDENT query/doc id spaces: pass excludeSelf = false
@@ -549,7 +487,7 @@ object Similarity {
         .select(col("query_id"), col("neighbor_id"),
           dotp(col("qv"), col("cv")).as("cos"))
         .distinct(),
-      k, stored.schema("neighbor_id").dataType)
+      Seq("query_id"), "cos", "neighbor_id", k)
   }
 
   /** Incremental EMBEDDING near-dup dedup — the
@@ -1154,7 +1092,8 @@ object Similarity {
       .crossJoin(broadcast(q))
       .withColumn("score",
         -graft.functions.AnnExpressions.adcSum(col("dtab"), col("pq_code")))
-    topkRanks(scored, k)
+    topKByScore(scored, Seq("query_id"), "score", "neighbor_id", k)
+      .drop("score")
   }
 
   /** RESIDUAL cell assignment, the scaffolding every IVF-compressed
@@ -1260,26 +1199,6 @@ object Similarity {
     }
   }
 
-  /** Bounded top-k tail shared by the stored compressed probes: long-id
-    * heap over (query_id, neighbor_id, score) → (query_id, neighbor_id,
-    * rank) — map-side partial combine, the shuffle carries ≤ k rows per
-    * (partition, query). */
-  private def topkRanks(scored: DataFrame, k: Int): DataFrame = {
-    val topk = udaf(new graft.model.Aggregators.TopKByScore(k),
-      org.apache.spark.sql.Encoders.product[graft.model.Aggregators.ScoredId])
-    scored
-      // same degenerate-score contract as rankTopK: a NULL score (null
-      // code elements from a non-finite vector) would crash the
-      // non-nullable buffer encoder; NaN would rank first — both mean
-      // "not a neighbor"
-      .filter(col("score").isNotNull && !isnan(col("score")))
-      .groupBy("query_id")
-      .agg(topk(col("score"), col("neighbor_id").cast("long")).as("tk"))
-      .select(col("query_id"), posexplode(col("tk.items")).as(Seq("idx", "it")))
-      .select(col("query_id"), col("it.id").as("neighbor_id"),
-        (col("idx") + 1).as("rank"))
-  }
-
   /** Exact re-rank of a nominated (query_id, neighbor_id, ...) set against
     * the raw vector table — the FAISS refine tail every compressed
     * nomination path shares ([[quantizedKnnRefined]], [[sqKnnRefined]],
@@ -1297,7 +1216,7 @@ object Similarity {
       .join(broadcast(cand.select("query_id", "neighbor_id")), "neighbor_id")
       .join(broadcast(q), "query_id")
       .withColumn("cos", dotp(col("qv"), col("cv")))
-    rankTopK(scored, k, corpus.schema(cId).dataType)
+    topKByScore(scored, Seq("query_id"), "cos", "neighbor_id", k)
   }
 
   // -------------------------------------------------------------------
@@ -1385,7 +1304,7 @@ object Similarity {
     * the id column keeps its name (the [[pqEncode]] convention, so one
     * `cId` threads through [[sqKnnRefined]]'s codes AND corpus sides).
     * NULL vectors encode to NULL codes (and score as "not a neighbor"
-    * downstream, the [[rankTopK]] contract). */
+    * downstream, the [[graft.model.Aggregators.topKByScore]] contract). */
   def sqEncode(df: DataFrame, model: SqModel, idCol: String = "vec_id",
                vecCol: String = "embedding"): DataFrame =
     df.select(col(idCol), sqCodes(col(vecCol), model).as("codes"))
@@ -1406,7 +1325,7 @@ object Similarity {
     val cond = if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true)
     val scored = c.join(broadcast(q), cond)
       .withColumn("cos", dot(col("qv"), col("cv")))
-    rankTopK(scored, k, codes.schema(cId).dataType)
+    topKByScore(scored, Seq("query_id"), "cos", "neighbor_id", k)
   }
 
   /** SQ8 nomination + exact re-rank (the FAISS refine pattern, as
@@ -1684,7 +1603,8 @@ object Similarity {
       // one neighbor occupy two top-k slots
       .groupBy("query_id", "neighbor_id")
       .agg(max("score").as("score"))
-    topkRanks(scored, k)
+    topKByScore(scored, Seq("query_id"), "score", "neighbor_id", k)
+      .drop("score")
   }
 
   /** Compressed nomination with EXACT re-ranking (the FAISS refine
@@ -1761,10 +1681,10 @@ object Similarity {
     val cr = corpus.select(col(cId).as("neighbor_id"),
       normalize(randomProject(col(cVec), dIn, dOut, seed)).as("cv"))
     val cond = if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true)
-    val nominated = rankTopK(
+    val nominated = topKByScore(
       cr.join(broadcast(qr), cond)
         .withColumn("cos", dotp(col("qv"), col("cv"))),
-      k * refine, corpus.schema(cId).dataType)
+      Seq("query_id"), "cos", "neighbor_id", k * refine)
     refineExact(nominated, queries, corpus, k, qId, qVec, cId, cVec)
   }
 

@@ -459,7 +459,8 @@ private[queries] trait CurationQueries { self: ExtensionQueryHelpers =>
   def warmV4(s: SparkSession, dir: String): Unit = v4Memo.warm(s, dir)
 
   /** Label the jobs a stage boundary triggers (guide-§1.5 job labels:
-    * the bench UI and the JOBLOG profiler attribute time per stage).
+    * the bench UI, the traced phase records and `Jobs.counted` with a
+    * description attribute work per stage).
     * Restores the caller's previous description (advisor note r17). */
   private def lbl[A](s: SparkSession, what: String)(body: => A): A =
     graft.util.Jobs.labeled(s.sparkContext, what)(body)

@@ -106,7 +106,7 @@ object DocStreaming {
       // rename BEFORE trusting the store: without this, a restart in that
       // window would dedup every batch against a store missing all
       // compacted shingles until an operator manually re-ran compactStore
-      recoverCompaction(fs, storePath)
+      StoreCompaction.recover(fs, storePath)
       // the store is hive-partitioned by batch id; a replayed batch must
       // not see its OWN half-written rows as "the corpus", so prior
       // batches only
@@ -143,15 +143,6 @@ object DocStreaming {
       .start()
   }
 
-  /** Compact a [[startNearDupDedup]] shingle store: merge every batch
-    * partition EXCEPT the newest into one `batch=-1` partition — see
-    * [[StoreCompaction]] for the replay-idempotence and crash-safety
-    * contract (shared with the IVF-appends twin,
-    * [[VecStreaming.compactStore]]). Run with the stream STOPPED; an
-    * interrupted run is healed by the next [[startNearDupDedup]]
-    * micro-batch ([[recoverCompaction]] runs before every store read),
-    * so a restarted stream never dedups against a store missing its
-    * compacted shingles. */
   /** Streaming BM25 index maintenance — the streaming twin of
     * [[graft.operators.Corpus.refreshBm25Store]]: each micro-batch's
     * postings/doclen/stats land in per-batch-id partition directories
@@ -178,7 +169,7 @@ object DocStreaming {
   : StreamingQuery = {
     val processBatch: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
       // heal an interrupted offline compaction before writing — same
-      // restart discipline as the shingle store's recoverCompaction
+      // restart discipline as the shingle store's StoreCompaction.recover
       graft.operators.Corpus.bm25RecoverCompaction(batch.sparkSession, storeDir)
       graft.operators.Corpus.writeBm25Batch(batch, idCol, textCol,
         storeDir, batchId, mode = "overwrite")
@@ -270,6 +261,15 @@ object DocStreaming {
       .start()
   }
 
+  /** Compact a [[startNearDupDedup]] shingle store: merge every batch
+    * partition EXCEPT the newest into one `batch=-1` partition — see
+    * [[StoreCompaction]] for the replay-idempotence and crash-safety
+    * contract (shared with the IVF-appends twin,
+    * [[VecStreaming.compactStore]]). Run with the stream STOPPED; an
+    * interrupted run is healed by the next [[startNearDupDedup]]
+    * micro-batch ([[StoreCompaction.recover]] runs before every store read),
+    * so a restarted stream never dedups against a store missing its
+    * compacted shingles. */
   def compactStore(spark: org.apache.spark.sql.SparkSession,
                    storeDir: String): Unit =
     StoreCompaction.compact(spark, storeDir, Seq("doc_id", "s"))
@@ -292,9 +292,4 @@ object DocStreaming {
   : org.apache.spark.sql.DataFrame =
     StoreCompaction.maintainStore(spark, storeDir, Seq("doc_id", "s"),
       maxLiveBatches = maxLiveBatches)
-
-  private[streaming] def recoverCompaction(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Unit =
-    StoreCompaction.recover(fs, root)
 }

@@ -36,6 +36,25 @@ import org.apache.spark.sql.functions._
   * manual compaction. */
 private[graft] object StoreCompaction {
 
+  /** The `root/batch=<id>` partition directories of a per-batch store,
+    * as (id, dir): directories only, names that do not parse as a long
+    * id skipped, a missing root empty. The one listing rule every
+    * batch-partitioned store (shingles, IVF appends, BM25 sub-stores,
+    * paragraph hashes) reads its batch set with. */
+  def batches(fs: FileSystem, root: Path): Seq[(Long, Path)] =
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.filter(_.isDirectory).flatMap { st =>
+      val n = st.getPath.getName
+      if (n.startsWith("batch="))
+        n.stripPrefix("batch=").toLongOption.map(_ -> st.getPath)
+      else None
+    }
+
+  /** The next free batch id under `root`: one above the largest listed
+    * ([[batches]]), never below 0 (`batch=-1` is the compacted snapshot). */
+  def nextBatch(fs: FileSystem, root: Path): Long =
+    (batches(fs, root).map(_._1) :+ -1L).max + 1
+
   /** Merge all committed batch partitions below the newest into
     * `batch=-1`, keeping `dataCols` (deduplicated by `merge`, default
     * DISTINCT) and re-partitioning the snapshot by `partCols` (e.g. the
@@ -57,17 +76,9 @@ private[graft] object StoreCompaction {
     if (!fs.exists(root)) return false
     val tmp = new Path(root, ".compact_tmp")
     val manifest = new Path(tmp, "_compact_manifest")
-    def batchDirs(): Seq[(Long, Path)] =
-      fs.listStatus(root).toSeq.filter(_.isDirectory).flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("batch="))
-          scala.util.Try(n.stripPrefix("batch=").toLong).toOption
-            .map(_ -> st.getPath)
-        else None
-      }
     // recover an interrupted compaction before looking at the partitions
     recover(fs, root)
-    val dirs = batchDirs()
+    val dirs = batches(fs, root)
     val numeric = dirs.map(_._1).filter(_ >= 0)
     if (numeric.isEmpty) return false
     val maxBatch = numeric.max
@@ -112,15 +123,7 @@ private[graft] object StoreCompaction {
     require(fs.exists(root), s"$storeDir does not exist")
     recover(fs, root)
     val conf = spark.sessionState.newHadoopConf()
-    val batches = fs.listStatus(root).toSeq.filter(_.isDirectory).flatMap {
-      st =>
-        val n = st.getPath.getName
-        if (n.startsWith("batch="))
-          scala.util.Try(n.stripPrefix("batch=").toLong).toOption
-            .map(_ -> st.getPath)
-        else None
-    }
-    val (compacted, live) = batches.partition(_._1 < 0)
+    val (compacted, live) = batches(fs, root).partition(_._1 < 0)
     def census(dirs: Seq[Path]): (Long, Long) = {
       val files = dirs.flatMap(ParquetMeta.parquetFiles(fs, _))
       (files.size.toLong,

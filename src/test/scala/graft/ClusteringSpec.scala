@@ -64,6 +64,15 @@ class ClusteringSpec extends SparkSpec {
     assert(cells.forall(c => c >= 0 && c < 4))
   }
 
+  /** The sample's hash of an id's string form: the first 15 hex nibbles
+    * of its md5, as a double. */
+  private def idHash(id: String): Double = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+      .digest(id.getBytes("UTF-8"))
+    java.lang.Long.parseLong(
+      md.take(8).map(b => f"$b%02x").mkString.take(15), 16).toDouble
+  }
+
   test("diversity sample: per-cluster quota, subset, deterministic hash order") {
     val df = (0L until 200L).map(i => (i, (i % 5).toString)).toDF("id", "c")
     val got = Sampling.diversitySample(df, "id", "c", quota = 7)
@@ -71,27 +80,23 @@ class ClusteringSpec extends SparkSpec {
     val byC = got.groupBy(_._1)
     assert(byC.values.forall(_.length == 7)) // 40 per cluster, quota binds
     // brute-force expectation: ascending (hash-as-double, id)
-    def h(id: Long): Double = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(id.toString.getBytes("UTF-8"))
-      java.lang.Long.parseLong(
-        md.take(8).map(b => f"$b%02x").mkString.take(15), 16).toDouble
-    }
     val expected = (0L until 200L).groupBy(i => (i % 5).toString)
       .toSeq.flatMap { case (c, ids) =>
-        ids.sortBy(i => (h(i), i)).take(7).map(i => (c, i))
+        ids.sortBy(i => (idHash(i.toString), i)).take(7).map(i => (c, i))
       }.toSet
     assert(got.toSet == expected)
   }
 
-  test("diversity sample rejects non-integral and null ids by name") {
-    // a string/UUID id would cast to null and silently empty the
-    // semi-join — must fail at plan time instead
-    val strIds = Seq(("a-1", "c0"), ("a-2", "c0")).toDF("id", "c")
-    val e = intercept[IllegalArgumentException] {
-      Sampling.diversitySample(strIds, "id", "c", quota = 1)
-    }
-    assert(e.getMessage.contains("integral id"))
+  test("diversity sample ranks string ids and rejects null ids by name") {
+    // a string/UUID id ranks by the same (hash, id) order as an integral
+    // one and joins back in its own type
+    val rows = (0 until 30).map(i => (s"a-$i", s"c${i % 2}"))
+    val got = Sampling.diversitySample(rows.toDF("id", "c"), "id", "c",
+      quota = 4).collect().map(r => (r.getString(1), r.getString(0))).toSet
+    val expected = rows.groupBy(_._2).toSeq.flatMap { case (c, rs) =>
+      rs.map(_._1).sortBy(id => (idHash(id), id)).take(4).map(id => (c, id))
+    }.toSet
+    assert(got == expected, s"string-id sample diverged: $got")
     // a null id inside an integral column fails the JOB with a named
     // error, never a silent drop or an encoder NPE
     val withNull = Seq((java.lang.Long.valueOf(1L), "c0"),

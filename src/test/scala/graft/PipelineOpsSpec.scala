@@ -746,6 +746,23 @@ class PipelineOpsSpec extends SparkSpec {
       qs.repartition(3), "query_id", "qtext", k = 5)
       .orderBy("query_id", "rank").collect()
     assert(a.sameElements(b))
+    // the same corpus under zero-padded string ids (string order = long
+    // order) ranks alike, ties included, and an INT id column comes back INT
+    val mixed = d.unionByName(twins)
+    val mq = Seq((1L, "a"), (2L, "x y"), (3L, "c z")).toDF("query_id", "qtext")
+    def ranks(ids: org.apache.spark.sql.Column) =
+      Corpus.bm25Search(Corpus.bm25Index(mixed.withColumn("doc_id", ids),
+        "doc_id", "text"), mq, "query_id", "qtext", k = 3)
+        .orderBy("query_id", "rank")
+    val byLong = ranks(col("doc_id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+    val byStr = ranks(format_string("d%05d", col("doc_id"))).collect()
+      .map(r => (r.getLong(0), r.getString(1).drop(1).toLong, r.getInt(2))).toSeq
+    assert(byStr == byLong, s"string-id BM25 ranks diverged: $byStr vs $byLong")
+    val byInt = ranks(col("doc_id").cast("int"))
+    assert(byInt.schema("doc_id").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(byInt.collect().map(r => (r.getLong(0), r.getInt(1).toLong, r.getInt(2)))
+      .toSeq == byLong)
   }
 
   // uniform corpus (no cluster structure -> PQ codes must discriminate on
@@ -2404,9 +2421,9 @@ class PipelineOpsSpec extends SparkSpec {
       Retrieval.rrfFuse(Seq(a.withColumnRenamed("doc_id", "neighbor_id")), 2)
     }
     assert(e.getMessage.contains("query_id"))
-    // STRING doc ids (URL/UUID corpora) take the code-point-ordered
-    // bounded heap — same output as the window form, and no Window node
-    // in the plan
+    // STRING doc ids (URL/UUID corpora) rank on the built-in window
+    // limit — same tie-break as the long heap, and at most k rows per
+    // (partition, query) cross the shuffle
     val s1 = Seq((9L, "doc-seven", 1)).toDF("query_id", "doc_id", "rank")
     val s2 = Seq((9L, "doc-five", 1)).toDF("query_id", "doc_id", "rank")
     val sFused = Retrieval.rrfFuse(Seq(s1, s2), k = 2)
@@ -2414,8 +2431,33 @@ class PipelineOpsSpec extends SparkSpec {
       .collect().map(r => (r.getString(1), r.getInt(2))).toSeq
     assert(sTied == Seq(("doc-five", 1), ("doc-seven", 2)),
       s"string ids must survive fusion with the same tie-break: $sTied")
-    assert(!sFused.queryExecution.executedPlan.toString.contains("Window"),
-      "string-id fusion must rank on the bounded heap, not a window")
+    // (k = 1 over two rows: Spark adds no limit where k covers every row)
+    val sTop1 = Retrieval.rrfFuse(Seq(s1, s2), k = 1)
+    assert(limitsBeforeShuffle(sTop1),
+      "string-id fusion must limit each group before the shuffle:\n" +
+        sTop1.queryExecution.executedPlan)
+  }
+
+  /** A Partial `WindowGroupLimit` sits below a hash exchange in the
+    * physical plan: at most k rows per (partition, group) are shuffled. */
+  private def limitsBeforeShuffle(df: org.apache.spark.sql.DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    plan.exists {
+      case e: ShuffleExchangeExec =>
+        e.outputPartitioning.isInstanceOf[HashPartitioning] &&
+          e.child.exists {
+            case w: WindowGroupLimitExec => w.mode == Partial
+            case _ => false
+          }
+      case _ => false
+    }
   }
 
   test("string-id top-k heap ≡ long-id heap under an order-preserving id map") {
@@ -2459,8 +2501,9 @@ class PipelineOpsSpec extends SparkSpec {
       .toMap
     assert(strKnn == longKnn,
       s"string kNN heap diverged from long kNN heap:\n$strKnn\nvs\n$longKnn")
-    assert(!strKnnDf.queryExecution.executedPlan.toString.contains("Window"),
-      "string-id kNN must rank on the bounded heap, not a window")
+    assert(limitsBeforeShuffle(strKnnDf),
+      "string-id kNN must limit each group before the shuffle:\n" +
+        strKnnDf.queryExecution.executedPlan)
   }
 
   test("bruteKnn excludeSelf=false keeps id-colliding pairs (independent id spaces)") {
